@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dsl._
-import graft.series.{Decomposition, Drift, SeriesKernels}
+import graft.series.{Decomposition, Drift, DriftKernel}
 
 /** Compiles a constraint suite to Catalyst plans and evaluates it with a
   * fixed small number of passes, independent of the number of constraints
@@ -24,7 +24,9 @@ import graft.series.{Decomposition, Drift, SeriesKernels}
   *  pass 4  anti-joins, one per referenced dimension (broadcast by
   *          default; shuffled sort-merge when `broadcastDim = false`
   *          marks the dim too large to ship to executors);
-  *  pass 5  turn-rate drift: bucket → decompose → residual/PSI/KS verdicts.
+  *  pass 5  turn-rate drift: one bucket count, then ONE grouped kernel per
+  *          conversation (STL, residual fences, PSI, KS, verdict) into a
+  *          single persisted frame that violations and verdicts both read.
   *
   * Verdicts are per conversation for row/series constraints (the north
   * rule's per-partition pass/fail) and global for aggregate constraints.
@@ -1757,71 +1759,42 @@ object Validator {
     mismatches ++ extras
   }
 
-  /** Turn-rate drift: bucket per (conv, window(ts)) → decompose → residual
-    * anomalies + per-conversation PSI/KS between first and second half.
+  /** Turn-rate drift: bucket per (conv, window(ts)), then ONE grouped
+    * pass ([[DriftKernel]]) scores each conversation's sorted series —
+    * decomposition, residual fences, PSI, KS and the verdict — into one
+    * persisted row per conversation; violations explode its anomaly array,
+    * verdicts project it. `classical` decomposes with window ops first and
+    * hands its residuals to the same kernel.
     */
-  private def turnRateDrift(df: DataFrame, check: Check, c: TurnRateDrift)
-      : (DataFrame, DataFrame, Seq[DataFrame]) = {
+  private[graft] def turnRateDrift(df: DataFrame, check: Check,
+      c: TurnRateDrift): (DataFrame, DataFrame, Seq[DataFrame]) = {
     val key = check.keyCol
-    // the bucketed series is tiny relative to the fact table (convs x
-    // buckets) but feeds four consumers (decomposition, PSI, KS, bucket
-    // counts) — persist it so the fact table is scanned ONCE for drift
     val series = df
       .groupBy(col(key), window(col(check.tsCol), c.bucket).as("w"))
       .agg(count(lit(1)).as("n_turns"))
       .select(col(key), col("w.start").as("bucket_ts"), col("n_turns"))
-      .withColumn("idx",
-        (row_number().over(Window.partitionBy(col(key)).orderBy(col("bucket_ts"))) - 1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    val decomposed = c.method match {
+    val scored = (c.method match {
       case "stl" =>
-        SeriesKernels.stl(series.withColumn("n_turns", col("n_turns").cast("double")),
-          key, "idx", "n_turns", c.period, c.seasonal)
+        DriftKernel.score(series, key, "bucket_ts", "n_turns", None, c)
       case "classical" =>
-        Decomposition.additive(series.withColumn("n_turns", col("n_turns").cast("double")),
-          "n_turns", c.period, Seq(key), Seq("idx"))
+        val decomposed = Decomposition.additive(
+          series.withColumn("__y", col("n_turns").cast("double")),
+          "__y", c.period, Seq(key), Seq("bucket_ts"))
+        DriftKernel.score(decomposed, key, "idx", "n_turns", Some("resid"), c)
       case other => throw new IllegalArgumentException(s"unknown method $other")
-    }
+    }).toDF().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val anomalies = Decomposition.residualAnomalies(
-      decomposed, Seq(key), c.residMethod, c.residThreshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val violations = anomalies.select(
-      lit(c.name).as("constraint"),
-      col(key).cast("string").as("conv_id"),
-      col("idx").cast("int").as("turn_idx"),
-      lit("n_turns").as("column"),
-      col("resid").cast("string").as("observed"),
-      lit(s"${c.residMethod}@${c.residThreshold}").as("bound"),
-      lit(c.severity).as("severity"))
-
-    // PSI/KS: first vs second half of each conversation's buckets
-    val wKey = Window.partitionBy(col(key))
-    val sided = series
-      .withColumn("__max_idx", max(col("idx")).over(wKey))
-      .withColumn("side", when(col("idx") * 2 <= col("__max_idx"), "baseline")
-        .otherwise("current"))
-    val psiDf = Drift.psi(sided, "n_turns", "side", Seq(key))
-    val ksDf = Drift.ks(sided, "n_turns", "side", Seq(key))
-    val residCounts = anomalies.groupBy(col(key))
-      .agg(count(lit(1)).as("resid_anomalies"))
-    val bucketCounts = series.groupBy(col(key)).agg(count(lit(1)).as("rows"))
-
-    val verdicts = bucketCounts
-      .join(psiDf, Seq(key), "left")
-      .join(ksDf, Seq(key), "left")
-      .join(residCounts, Seq(key), "left")
-      .na.fill(0L, Seq("resid_anomalies"))
-      .withColumn("pass",
-        col("resid_anomalies") === 0 &&
-          coalesce(col("psi") <= c.psiThreshold, lit(true)) &&
-          coalesce(col("ks") <= c.ksThreshold, lit(true)))
-      .select(col(key).cast("string").as("partition_key"),
-        lit(c.name).as("constraint"), col("pass"), col("rows"),
-        col("resid_anomalies").as("violations"),
-        (col("resid_anomalies") / col("rows")).as("violation_rate"))
-
-    (violations, verdicts, Seq(series, anomalies))
+    val violations = scored
+      .select(col("key"), explode(col("anomalies")).as("a"))
+      .select(lit(c.name).as("constraint"), col("key").as("conv_id"),
+        col("a.idx").as("turn_idx"), lit("n_turns").as("column"),
+        col("a.resid").cast("string").as("observed"),
+        lit(s"${c.residMethod}@${c.residThreshold}").as("bound"),
+        lit(c.severity).as("severity"))
+    val verdicts = scored.select(col("key").as("partition_key"),
+      lit(c.name).as("constraint"), col("pass"), col("rows"),
+      col("violations"),
+      (col("violations") / col("rows")).as("violation_rate"))
+    (violations, verdicts, Seq(scored))
   }
 }

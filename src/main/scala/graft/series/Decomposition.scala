@@ -122,48 +122,4 @@ object Decomposition {
             col("var_seasonal") / (col("var_seasonal") + col("var_resid"))))))
       .drop("var_trend", "var_seasonal")
   }
-
-  /** T5: residual anomaly rows (reference src/decomposition.py:140-181).
-    * method ∈ {iqr, zscore, threshold}; thresholds match the reference
-    * defaults (iqr k, zscore on SAMPLE std, abs threshold). Quantiles are
-    * exact per-series (small series) via percentile over the key group —
-    * one extra aggregation + re-join by key (both shuffles on the key).
-    */
-  def residualAnomalies(decomposed: DataFrame, keyCols: Seq[String],
-      method: String = "iqr", threshold: Double = 2.0): DataFrame = {
-    val key = keyCols.map(col)
-    method match {
-      case "iqr" =>
-        val q = decomposed.where(col("resid").isNotNull).groupBy(key: _*).agg(
-          expr("percentile(resid, 0.25)").as("rq1"),
-          expr("percentile(resid, 0.75)").as("rq3"))
-        // fence comparisons carry a 1e-9-relative tolerance: with a
-        // degenerate IQR (constant-ish residuals) the fence EQUALS the
-        // common residual value and double-precision noise between rows
-        // (different trend-window summation groupings) would otherwise
-        // decide flags — an anomaly within 1e-9 of the fence is numerical
-        // fiction, not signal
-        val tol = lit(1e-9) *
-          greatest(abs(col("lo")), abs(col("hi")), lit(1.0))
-        decomposed.join(q, keyCols)
-          .withColumn("lo", col("rq1") - lit(threshold) * (col("rq3") - col("rq1")))
-          .withColumn("hi", col("rq3") + lit(threshold) * (col("rq3") - col("rq1")))
-          .where(col("resid") < col("lo") - tol || col("resid") > col("hi") + tol)
-          .drop("rq1", "rq3")
-      case "zscore" =>
-        val s = decomposed.where(col("resid").isNotNull).groupBy(key: _*).agg(
-          avg(col("resid")).as("rmean"), stddev_samp(col("resid")).as("rstd"))
-        decomposed.join(s, keyCols)
-          // constant residuals (a perfectly periodic series) have rstd = 0:
-          // null rz, nothing flagged — unguarded this is an ANSI
-          // DIVIDE_BY_ZERO crash, and a perfect fit is not an anomaly
-          .withColumn("rz", when(col("rstd") > 0,
-            abs((col("resid") - col("rmean")) / col("rstd"))))
-          .where(col("rz") > threshold)
-          .drop("rmean", "rstd")
-      case "threshold" =>
-        decomposed.where(abs(col("resid")) > threshold)
-      case other => throw new IllegalArgumentException(s"unknown method: $other")
-    }
-  }
 }

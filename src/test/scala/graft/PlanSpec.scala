@@ -222,6 +222,45 @@ class PlanSpec extends GraftSuite {
     spark.sharedState.cacheManager.clearCache()
   }
 
+  test("turn-rate drift: one grouped kernel — at most 2 exchanges, no sort-merge join, one cached frame") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val cacheManager = spark.sharedState.cacheManager
+    cacheManager.clearCache()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val t = sources.TranscriptGen.generate(spark, nConvs = 60, baseTurns = 30)
+      val c = graft.dsl.TurnRateDrift(bucket = "1 minute", period = 7)
+      val check = graft.dsl.Check("drift", Seq(c))
+      val (violations, verdicts, cached) =
+        compile.Validator.turnRateDrift(t, check, c)
+      assert(cached.size == 1, s"drift persisted ${cached.size} frames")
+      assert(verdicts.count() == 60 && violations.count() >= 0)
+      // both outputs read the persisted scored frame — walk into its plan
+      for (out <- Seq(violations, verdicts)) {
+        val top = out.queryExecution.executedPlan
+        val scans = top.collect { case s: InMemoryTableScanExec => s }
+        assert(scans.size == 1, s"expected one cached-frame scan:\n$top")
+        val scored = scans.head.relation.cachedPlan
+        val exchanges = scored.collect { case e: ShuffleExchangeExec => e }
+        assert(exchanges.size <= 2,
+          s"${exchanges.size} exchanges in the drift plan:\n$scored")
+        for (p <- Seq(top, scored))
+          assert(p.collect { case j: SortMergeJoinExec => j }.isEmpty,
+            s"sort-merge join in the drift plan:\n$p")
+      }
+      cached.foreach(_.unpersist())
+      // through validate(): the violation union plus the ONE scored frame,
+      // and unpersistAll() releases everything validate() cached
+      val r = compile.Validator.validate(t, check)
+      assert(r.verdicts.count() > 0 && r.violations.count() >= 0)
+      assert(r.cached.size == 2, s"Result.cached holds ${r.cached.size} frames")
+      r.unpersistAll()
+      assert(cacheManager.isEmpty, "unpersistAll() left cached plans behind")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("q91 suggestion census: ONE fused agg pass; string distincts ride a digest, not the text") {
     val t = sources.Tables.transcripts(spark, sfTiny)
     val df = graft.compile.Suggestions.censusFrame(t)

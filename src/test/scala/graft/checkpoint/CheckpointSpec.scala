@@ -21,22 +21,27 @@ class CheckpointSpec extends GraftSuite {
     MinRows(100),
     DistinctCountBetween("conv_id", 50, 70),
     QuantileBetween("turn_idx", 0.5, 0.0, 10000.0)))
+  // ~30 one-minute buckets per conversation: the STL kernel runs per slice
+  lazy val driftCheck = check.copy(constraints = check.constraints :+
+    TurnRateDrift(bucket = "1 minute", period = 7, residThreshold = 1.5))
 
   test("kill-after-k restart merges to single-run results") {
     val dir = Files.createTempDirectory("graft_cp").toString
     val r1 = new ResumableValidation(spark, dir, partitions = 4)
     // first attempt dies after 2 partitions
-    assert(r1.run(transcripts, check, ctx, maxPartitionsThisRun = 2).isEmpty)
+    assert(r1.run(transcripts, driftCheck, ctx, maxPartitionsThisRun = 2).isEmpty)
     assert((0 until 4).count(r1.isDone) == 2)
     // restart: fresh instance, same checkpoint dir — finishes the rest
     val r2 = new ResumableValidation(spark, dir, partitions = 4)
-    val Some((violations, verdicts, metrics)) = r2.run(transcripts, check, ctx)
+    val Some((violations, verdicts, metrics)) =
+      r2.run(transcripts, driftCheck, ctx)
     assert(metrics.size == 4 && metrics.map(_.rows).sum == transcripts.count())
 
     // equals a single-shot run of the conversation-scoped constraints
-    val single = Validator.validate(transcripts, check.copy(constraints =
-      check.constraints.filter {
-        case _: UniqueKey | _: ReferentialIntegrity | _: NotNull => true
+    val single = Validator.validate(transcripts, driftCheck.copy(constraints =
+      driftCheck.constraints.filter {
+        case _: UniqueKey | _: ReferentialIntegrity | _: NotNull |
+            _: TurnRateDrift => true
         case _ => false
       }), ctx)
     val a = violations.orderBy("constraint", "conv_id", "turn_idx", "observed")
@@ -44,6 +49,15 @@ class CheckpointSpec extends GraftSuite {
     val b = single.violations.orderBy("constraint", "conv_id", "turn_idx", "observed")
       .collect().toSeq
     assert(a == b, s"violations differ: ${a.size} vs ${b.size}")
+    // per-conversation drift verdicts: sliced-then-merged == one shot
+    def drift(v: org.apache.spark.sql.DataFrame) =
+      v.where(col("constraint") === "turn_rate_drift")
+        .orderBy("partition_key").collect().toSeq
+    val (da, db) = (drift(verdicts), drift(single.verdicts))
+    assert(da.size == 60 && da == db, s"drift verdicts differ: ${da.size} vs ${db.size}")
+    assert(a.exists(_.getString(0) == "turn_rate_drift") &&
+      da.exists(!_.getBoolean(2)), "drift compared nothing")
+    single.unpersistAll()
 
     // aggregate verdicts from merged sketch state match full-data evaluation
     val aggV = verdicts.where(col("partition_key") === "(global)")

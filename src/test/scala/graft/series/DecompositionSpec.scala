@@ -2,6 +2,7 @@ package graft.series
 
 import org.apache.spark.sql.functions._
 import graft.GraftSuite
+import graft.compile.TurnRateDriftReference
 
 /** Differential oracle for the distributed classical decomposition: an
   * independent array-based implementation of the statsmodels formulas
@@ -96,7 +97,8 @@ class DecompositionSpec extends GraftSuite {
     // pure seasonal+trend series -> residuals all ~0 with rstd = 0
     val df = (0 until 84).map(i => ("k", i, 5.0)).toDF("key", "i", "y")
     val dec = Decomposition.additive(df, "y", 7, Seq("key"), Seq("i"))
-    val found = Decomposition.residualAnomalies(dec, Seq("key"), "zscore", 3.0)
+    val found =
+      TurnRateDriftReference.residualAnomalies(dec, Seq("key"), "zscore", 3.0)
     assert(found.count() == 0)
   }
 
@@ -121,7 +123,7 @@ class DecompositionSpec extends GraftSuite {
       .toDF("key", "i", "y")
     val dec = Decomposition.additive(df, "y", 7, Seq("key"), Seq("i"))
     for (m <- Seq("iqr", "zscore")) {
-      val found = Decomposition.residualAnomalies(dec, Seq("key"), m,
+      val found = TurnRateDriftReference.residualAnomalies(dec, Seq("key"), m,
           if (m == "iqr") 2.0 else 3.0)
         .select("i").as[Int].collect().toSet
       assert(spikes.subsetOf(found), s"$m missed spikes: $found")
