@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.dsl._
-import graft.series.{Decomposition, Drift, DriftKernel}
+import graft.series.{Decomposition, Drift, DriftKernel, RollingKernel}
 
 /** Compiles a constraint suite to Catalyst plans and evaluates it with a
   * fixed small number of passes, independent of the number of constraints
@@ -18,8 +18,10 @@ import graft.series.{Decomposition, Drift, DriftKernel}
   *          counts, HLL cardinalities) — collected as ONE driver row;
   *  pass 1b one more fused aggregation iff RobustZ needs MAD (median of
   *          |x - median|) — the only stat that depends on another stat;
-  *  pass 2  one projection with every row-level flag + windowed rolling-z
-  *          flags, exploded into violation rows (single scan);
+  *  pass 2  one projection with every row-level flag, exploded into
+  *          violation rows (single scan); rolling-z flags and the fused
+  *          (key, order) duplicate-key census in ONE sorted kernel pass per
+  *          (conversation, chunk) over the pruned (key, order, value);
   *  pass 3  uniqueness group-bys (one per key tuple);
   *  pass 4  anti-joins, one per referenced dimension (broadcast by
   *          default; shuffled sort-merge when `broadcastDim = false`
@@ -597,14 +599,7 @@ object Validator {
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row], violationSchema)
 
-    // A UniqueKey on exactly (keyCol, orderCol) rides the rolling window's
-    // exchange+sort for free (peer census in the same Window stage) —
-    // one fewer full scan + shuffle. Other key tuples keep their groupBy.
-    val fusedUnique: Option[UniqueKey] = check.constraints.collectFirst {
-      case u @ UniqueKey(cols)
-          if cols == Seq(check.keyCol, check.orderCol) &&
-            check.constraints.exists(_.isInstanceOf[RollingZDrift]) => u
-    }
+    val fusedUnique = fusedUniqueKey(check)
 
     def uniqueRows(u: UniqueKey, src: DataFrame, nCol: Column): DataFrame =
       src.select(lit(u.name).as("constraint"),
@@ -620,48 +615,7 @@ object Validator {
         lit("1 copy").as("bound"),
         lit(u.severity).as("severity"))
 
-    // windowed row flags evaluated SEPARATELY on a pruned projection: the
-    // per-conversation sort shuffles only (key, order, value) — never the
-    // text payload (at 10^12 turns the text bytes dominate shuffle IO).
-    // The rolling window itself is the CHUNKED variant: a mega-conversation
-    // spreads over turns/chunk tasks instead of landing on one reducer
-    // (graft.series.Windows.boundedRollingStats; dense turn_idx required).
-    val windowViolations: Seq[DataFrame] = check.constraints
-      .collect { case c: RollingZDrift => c }.zipWithIndex.map { case (c, i) =>
-        val columnName = c.column; val window = c.window; val t = c.threshold
-        val v = col(columnName)
-        val pruned = df.select(key, ord, v)
-        // the fused UniqueKey rides exactly ONE window pass (the first):
-        // attaching it per-RollingZDrift would emit the duplicate-key
-        // violations once per drift constraint, double-counting them
-        val fuseHere = fusedUnique.filter(_ => i == 0)
-        val stats = graft.series.Windows.boundedRollingStats(
-          pruned, columnName, window, check.keyCol, check.orderCol,
-          withOrdPeers = fuseHere.nonEmpty)
-        val n = col(s"${columnName}_n")
-        // std = 0 (constant window) ⇒ null z, not flagged — and the divide
-        // never runs (ANSI DIVIDE_BY_ZERO applies to doubles in Spark 4)
-        // NaN guards mirror Windows.rollingZ: Spark SQL treats NaN > 0 (and
-        // abs(NaN) > t) as TRUE, so a NaN value in validated data would turn
-        // every window covering it into a false-positive violation
-        val std = col(s"${columnName}_rolling_std")
-        val z = when(!isnan(std) && std > 0,
-          (v - col(s"${columnName}_rolling_mean")) / std)
-        // ONE explodeViolations pass emits BOTH the rolling flags and the
-        // fused duplicate-key flags: two branches over `stats` would share
-        // only the exchange (ReuseExchange) and re-run the 10^7-row
-        // sort+window compute per branch — measured ~50 task-CPU-seconds
-        // of pure waste per suite pass
-        val checks = Seq(RowCheck(c, columnName,
-          coalesce(n >= window && !isnan(z) && abs(z) > t, lit(false)),
-          v.cast("string"), s"rolling|z|<=$t@$window")) ++
-          fuseHere.map { u =>
-            RowCheck(u, u.columns.mkString(","),
-              col("__ord_peers") > 1 && col("__ord_first"),
-              col("__ord_peers"), "1 copy")
-          }
-        explodeViolations(stats, checks)
-    }
+    val windowViolations = rollingZViolations(df, check)
 
     // ---- pass 3: uniqueness (non-fused key tuples) --------------------------
     val uniqueViolations: Seq[DataFrame] = check.constraints.collect {
@@ -1573,28 +1527,8 @@ object Validator {
       Seq.empty[(String, String, Boolean, Long, Long, Double)]
         .toDF("partition_key", "constraint", "pass", "rows", "violations",
           "violation_rate")
-    } else {
-      // the null-key conversation group joins under a "(null)" sentinel:
-      // a null conv_id can never EQUI-match between the row census and
-      // the violation counts, so without it the null group's verdict
-      // reported 0/pass regardless of its violation rows (verdicts
-      // contradicting the violation sink — pass-by-omission)
-      val convRows = df
-        .groupBy(coalesce(key.cast("string"), lit("(null)")).as("conv_id"))
-        .agg(count(lit(1)).as("rows"))
-      val cDf = perConvConstraints.toDF("constraint", "max_rate")
-      val vCounts = allViolations
-        .groupBy(coalesce(col("conv_id"), lit("(null)")).as("conv_id"),
-          col("constraint"))
-        .agg(count(lit(1)).as("violations"))
-      convRows.crossJoin(broadcast(cDf))
-        .join(vCounts, Seq("conv_id", "constraint"), "left")
-        .na.fill(0L, Seq("violations"))
-        .withColumn("violation_rate", col("violations") / col("rows"))
-        .withColumn("pass", col("violation_rate") <= col("max_rate"))
-        .select(col("conv_id").as("partition_key"), col("constraint"),
-          col("pass"), col("rows"), col("violations"), col("violation_rate"))
-    }
+    } else conversationVerdicts(df, check.keyCol, perConvConstraints,
+      allViolations)
 
     // global verdicts for aggregate constraints, straight from the stats row
     val globalVerdicts: Seq[(String, Boolean, Long, Long, Double)] =
@@ -1757,6 +1691,79 @@ object Validator {
       else df.schema.fields.filterNot(f => declaredNames.contains(f.name))
         .map(f => (f.name, f.dataType.simpleString, "(not declared)")).toSeq
     mismatches ++ extras
+  }
+
+  /** A UniqueKey on exactly (keyCol, orderCol) rides the rolling-z pass
+    * (its duplicate-key census is a by-product of that pass's sort) — one
+    * fewer full scan + shuffle. Other key tuples keep their groupBy.
+    */
+  private[graft] def fusedUniqueKey(check: Check): Option[UniqueKey] =
+    check.constraints.collectFirst {
+      case u @ UniqueKey(cols)
+          if cols == Seq(check.keyCol, check.orderCol) &&
+            check.constraints.exists(_.isInstanceOf[RollingZDrift]) => u
+    }
+
+  /** Rolling-z violation rows, one frame per [[RollingZDrift]], each from
+    * one [[RollingKernel]] pass over the pruned (key, order, value)
+    * projection — the text payload never rides its exchange. The fused
+    * UniqueKey rides exactly ONE pass (the first): attaching it to every
+    * pass would emit each duplicate key once per drift constraint.
+    * `observed` is cast here from the value's own column type.
+    */
+  private[graft] def rollingZViolations(df: DataFrame, check: Check,
+      chunk: Int = graft.series.Windows.DefaultChunk): Seq[DataFrame] = {
+    val fused = fusedUniqueKey(check)
+    check.constraints.collect { case c: RollingZDrift => c }.zipWithIndex
+      .map { case (c, i) =>
+        val fuseHere = fused.filter(_ => i == 0)
+        val flagged = RollingKernel.flags(df, check.keyCol, check.orderCol,
+          c.column, c.window, c.threshold, dupKeys = fuseHere.nonEmpty, chunk)
+        // a set __peers marks a duplicate-key row of the fused UniqueKey
+        def pick(dup: UniqueKey => Column, rolling: Column): Column =
+          fuseHere.fold(rolling)(u =>
+            when(col("__peers").isNotNull, dup(u)).otherwise(rolling))
+        flagged.select(
+          pick(u => lit(u.name), lit(c.name)).as("constraint"),
+          col(check.keyCol).cast("string").as("conv_id"),
+          col(check.orderCol).cast("int").as("turn_idx"),
+          pick(u => lit(u.columns.mkString(",")), lit(c.column)).as("column"),
+          pick(_ => col("__peers").cast("string"),
+            col(c.column).cast("string")).as("observed"),
+          pick(_ => lit("1 copy"),
+            lit(s"rolling|z|<=${c.threshold}@${c.window}")).as("bound"),
+          pick(u => lit(u.severity), lit(c.severity)).as("severity"))
+      }
+  }
+
+  /** Per-conversation verdicts: for every (conversation, constraint) pair,
+    * rows, violations counted from `violations`, and pass iff the
+    * violation rate is at most the constraint's max rate. The null-key
+    * conversation group joins under a "(null)" sentinel: a null conv_id
+    * can never EQUI-match between the row census and the violation
+    * counts, so without it the null group's verdict reported 0/pass
+    * regardless of its violation rows (verdicts contradicting the
+    * violation sink — pass-by-omission).
+    */
+  private[graft] def conversationVerdicts(df: DataFrame, keyCol: String,
+      constraints: Seq[(String, Double)], violations: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val convRows = df
+      .groupBy(coalesce(col(keyCol).cast("string"), lit("(null)")).as("conv_id"))
+      .agg(count(lit(1)).as("rows"))
+    val cDf = constraints.toDF("constraint", "max_rate")
+    val vCounts = violations
+      .groupBy(coalesce(col("conv_id"), lit("(null)")).as("conv_id"),
+        col("constraint"))
+      .agg(count(lit(1)).as("violations"))
+    convRows.crossJoin(broadcast(cDf))
+      .join(vCounts, Seq("conv_id", "constraint"), "left")
+      .na.fill(0L, Seq("violations"))
+      .withColumn("violation_rate", col("violations") / col("rows"))
+      .withColumn("pass", col("violation_rate") <= col("max_rate"))
+      .select(col("conv_id").as("partition_key"), col("constraint"),
+        col("pass"), col("rows"), col("violations"), col("violation_rate"))
   }
 
   /** Turn-rate drift: bucket per (conv, window(ts)), then ONE grouped

@@ -62,63 +62,62 @@ object Windows {
         coalesce(!isnan(z) && abs(z) > zThreshold, lit(false)))
   }
 
-  /** W1/W2 at mega-key scale: trailing rolling mean/std/count with a
-    * BOUNDED per-task row count. A plain `Window.partitionBy(key)` puts a
-    * whole conversation on one task — a 10^7-turn mega-thread becomes a
-    * single straggler. Here rows are chunked by `floor(ord / chunk)` with
-    * the previous chunk's last (window-1) rows duplicated in as a halo
-    * (one scan: the halo rides an explode, not a second read), the window
-    * runs within (key, chunk), and each row is emitted only by its home
-    * chunk — so no task ever sorts more than chunk + window - 1 rows of
-    * one key, and a mega-thread spreads over n/chunk tasks.
+  /** Default rows per (key, chunk): large enough that ordinary
+    * conversations never split.
+    */
+  val DefaultChunk: Int = 1 << 16
+
+  /** The chunk-and-halo rule behind every bounded per-key series pass. A
+    * plain `Window.partitionBy(key)` puts a whole conversation on one task
+    * — a 10^7-turn mega-thread becomes a single straggler. Here rows are
+    * chunked by `__chunk = floor(ord / chunk)`, and the last (window-1)
+    * order values of each chunk are copied into the next one as a halo
+    * (`__copy` = 1; one scan: the halo rides an explode, not a second
+    * read). A pass grouped by (key, `__chunk`) and ordered by `ordCol`
+    * then sees every row's trailing window, and emits only home rows
+    * (`__copy` = 0) — so no task ever sorts more than chunk + window - 1
+    * rows of one key, and a mega-thread spreads over n/chunk tasks. Halo
+    * rows occupy the order values below the landing chunk's home rows.
+    * A null order value lands, without a halo, in a null chunk.
     *
     * Requires a DENSE integer order column (turn_idx = 0..n-1, the north-
     * rule data model): halo membership is decided by ord value, which
     * equals the row position only when the index has no gaps. With gaps a
     * head-of-chunk window may see fewer than `window` rows and stay
-    * un-flagged (never a false positive). Identical to the plain window
-    * on dense input (WindowsSpec asserts equality).
+    * un-flagged (never a false positive).
     *
     * Why this is NOT gated on a mega-key probe (VERDICT r2 item 9): when
     * no conversation reaches `chunk` rows, zero rows satisfy `haloNeeded`,
     * so the explode degenerates to a 1-element-array generate — a few % of
-    * the window stage. A `megaKeys` probe to decide whether to skip it is
-    * itself a full groupBy-count job over the fact table, which costs more
-    * than the generate it would eliminate. Callers that KNOW their keys
-    * are bounded can use a plain window directly.
+    * the pass. A `megaKeys` probe to decide whether to skip it is itself a
+    * full groupBy-count job over the fact table, which costs more than the
+    * generate it would eliminate. Callers that KNOW their keys are bounded
+    * can use a plain window directly.
     */
-  def boundedRollingStats(df: DataFrame, valueCol: String, window: Int,
-      keyCol: String, ordCol: String, chunk: Int = 1 << 16,
-      withOrdPeers: Boolean = false): DataFrame = {
+  def chunkWithHalo(df: DataFrame, ordCol: String, window: Int,
+      chunk: Int): DataFrame = {
     require(chunk >= window, s"chunk ($chunk) must be >= window ($window)")
     val ord = col(ordCol).cast("long")
     val haloNeeded = pmod(ord, lit(chunk.toLong)) >= (chunk - (window - 1)).toLong
+    df.withColumn("__copy", explode(
+        when(haloNeeded, array(lit(0), lit(1))).otherwise(array(lit(0)))))
+      .withColumn("__chunk", floor(ord / chunk) + col("__copy"))
+  }
+
+  /** W1/W2 at mega-key scale: trailing rolling mean/std/count within
+    * (key, chunk) under [[chunkWithHalo]], so the per-task row count is
+    * bounded. Identical to the plain window on dense input (SkewSpec
+    * asserts equality).
+    */
+  def boundedRollingStats(df: DataFrame, valueCol: String, window: Int,
+      keyCol: String, ordCol: String, chunk: Int = DefaultChunk): DataFrame = {
     val w = Window.partitionBy(col(keyCol), col("__chunk")).orderBy(col(ordCol))
       .rowsBetween(-(window - 1), 0)
     val v = col(valueCol)
-    val base = df.withColumn("__copy", explode(
-        when(haloNeeded, array(lit(0), lit(1))).otherwise(array(lit(0)))))
-      .withColumn("__chunk", floor(ord / chunk) + col("__copy"))
+    chunkWithHalo(df, ordCol, window, chunk)
       .withColumn(s"${valueCol}_n", count(v).over(w))
       .withColumn(s"${valueCol}_rolling_mean", avg(v).over(w))
       .withColumn(s"${valueCol}_rolling_std", stddev_samp(v).over(w))
-    // optional duplicate-key census riding the SAME exchange+sort (the
-    // peers/lag specs share the window's partitioning and order, so Spark
-    // plans them in the same Window stage — a UniqueKey(key, ord) check
-    // gets its groupBy for free): __ord_peers = copies of this ord value,
-    // __ord_first = this row is the tie-group representative. Halo rows
-    // occupy a disjoint ord range in their landing chunk, so peer counts
-    // see home rows only.
-    val withPeers = if (!withOrdPeers) base else {
-      val wPeers = Window.partitionBy(col(keyCol), col("__chunk"))
-        .orderBy(ord).rangeBetween(0, 0)
-      val wSeq = Window.partitionBy(col(keyCol), col("__chunk")).orderBy(col(ordCol))
-      base
-        .withColumn("__ord_peers", count(lit(1)).over(wPeers))
-        .withColumn("__ord_first",
-          coalesce(!(ord <=> lag(ord, 1).over(wSeq)), lit(true)))
-    }
-    withPeers
       .where(col("__copy") === 0)
       .drop("__copy", "__chunk")
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState}
 
+import graft.series.RollingKernel
+
 /** Stateful streaming constraint evaluation (SURVEY.md §2.11 extension):
   * the rolling-z check runs directly on a stream of turns via
   * `flatMapGroupsWithState`, with per-conversation state bounded at
@@ -19,10 +21,11 @@ import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, GroupState
   * Semantics match the batch kernel (Validator's RollingZDrift /
   * Windows.rollingStats with min_periods = window): a turn is flagged when
   * the trailing `window` rows hold `window` non-null values and
-  * |value - mean| / sample-std > threshold. Within a micro-batch, events
-  * are processed in turn_idx order; ACROSS batches, arrival must be
-  * turn-ordered per conversation (the transcript-append contract — an
-  * out-of-order turn would need the batch path).
+  * |value - mean| / sample-std > threshold, folded by
+  * [[graft.series.RollingKernel]] as in the batch pass. Within a
+  * micro-batch, events are processed in turn_idx order; ACROSS batches,
+  * arrival must be turn-ordered per conversation (the transcript-append
+  * contract — an out-of-order turn would need the batch path).
   */
 object StreamingValidator {
 
@@ -57,8 +60,8 @@ object StreamingValidator {
   def rollingZViolations(turns: Dataset[Turn], column: String, window: Int,
       threshold: Double, idleTimeoutMs: Long = 3600 * 1000L): Dataset[Violation] = {
     // window = 1 is legal on BOTH paths and flags nothing (one sample has
-    // no variance: batch stddev_samp is null, this kernel's 0/0 variance
-    // is NaN), so it must not be rejected here. window = 0 would reach
+    // no variance: batch stddev_samp is null, the shared fold's std is
+    // NaN), so it must not be rejected here. window = 0 would reach
     // xs.last on an empty trailing window below, where the batch kernel's
     // rowsBetween(1,0) is just an empty frame (null aggregates, no
     // flags) — reject it instead of crashing mid-stream
@@ -68,20 +71,15 @@ object StreamingValidator {
     val timeoutConf = if (idleTimeoutMs > 0) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
 
-    def flag(values: Seq[(Boolean, Double)]): Option[(Double, Double, Double)] = {
-      // values = trailing `window` slots (present, value); flag only when
-      // every slot holds a non-null value (pandas min_periods = window)
-      if (values.length < window || values.exists(!_._1)) None
-      else {
-        val xs = values.map(_._2)
-        val n = xs.length
-        val mean = xs.sum / n
-        val varS = xs.map(x => (x - mean) * (x - mean)).sum / (n - 1)
-        val std = math.sqrt(varS)
-        val z = (xs.last - mean) / std
-        if (std > 0 && math.abs(z) > threshold) Some((xs.last, z, std)) else None
+    // values = trailing `window` slots (present, value); flag only when
+    // every slot holds a non-null value (pandas min_periods = window),
+    // through the batch kernel's fold and guards
+    def flagged(values: Seq[(Boolean, Double)]): Boolean =
+      values.length >= window && values.forall(_._1) && {
+        val xs = values.map(_._2).toArray
+        val (mean, std) = RollingKernel.meanStd(xs, 0, xs.length)
+        RollingKernel.flagged(xs.last - mean, std, threshold)
       }
-    }
 
     turns.groupByKey(_.conv_id)
       .flatMapGroupsWithState(OutputMode.Append, timeoutConf) {
@@ -96,11 +94,10 @@ object StreamingValidator {
             events.toSeq.sortBy(_.turn_idx).foreach { e =>
               val slot = (e.v.isDefined, e.v.getOrElse(0.0))
               val trailing = (recent :+ slot).takeRight(window)
-              flag(trailing).foreach { case (obs, z, _) =>
+              if (flagged(trailing))
                 out += Violation(s"rolling_z($column)", convId, e.turn_idx,
-                  column, obs.toString, s"rolling|z|<=$threshold@$window",
+                  column, slot._2.toString, s"rolling|z|<=$threshold@$window",
                   "medium")
-              }
               recent = (recent :+ slot).takeRight(window - 1)
             }
             state.update(RollState(recent))

@@ -261,6 +261,48 @@ class PlanSpec extends GraftSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("rolling-z + fused UniqueKey: one sorted kernel — 1 exchange, 1 sort, no window; none added over a key-partitioned input") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.functions._
+    import graft.dsl.{Check, RollingZDrift, UniqueKey}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val t = sources.TranscriptGen.generate(spark, nConvs = 60, baseTurns = 30)
+      def check(column: String) = Check("rz", Seq(
+        UniqueKey(Seq("conv_id", "turn_idx")), RollingZDrift(column, 24, 3.0)))
+      def plan(df: DataFrame) = df.queryExecution.executedPlan
+      def exchanges(df: DataFrame) =
+        plan(df).collect { case e: ShuffleExchangeExec => e }
+
+      // a plain frame: the kernel's own exchange and sort, and nothing else
+      val plain = t.withColumn("v",
+        pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(100L)).cast("double"))
+      val Seq(flags) = compile.Validator.rollingZViolations(plain, check("v"))
+      flags.collect()
+      val shuffled = exchanges(flags).flatMap(_.child.output.map(_.name))
+      assert(exchanges(flags).size == 1, s"exchanges:\n${plan(flags)}")
+      assert(plan(flags).collect { case s: SortExec => s }.size == 1,
+        s"sorts:\n${plan(flags)}")
+      assert(plan(flags).collect { case w: WindowExec => w }.isEmpty,
+        s"window operators:\n${plan(flags)}")
+      assert(!shuffled.exists(_.contains("text")),
+        s"text rides a shuffle: $shuffled")
+
+      // the bench suite's lag-window input is already partitioned by key
+      val gapped = t.withColumn("turn_gap_s",
+        (unix_timestamp(col("ts")) - lag(unix_timestamp(col("ts")), 1).over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("conv_id"))
+            .orderBy(col("turn_idx")))).cast("double"))
+      val Seq(gapFlags) =
+        compile.Validator.rollingZViolations(gapped, check("turn_gap_s"))
+      gapFlags.collect()
+      assert(exchanges(gapFlags).size == exchanges(gapped).size,
+        s"the pass added an exchange:\n${plan(gapFlags)}")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("q91 suggestion census: ONE fused agg pass; string distincts ride a digest, not the text") {
     val t = sources.Tables.transcripts(spark, sfTiny)
     val df = graft.compile.Suggestions.censusFrame(t)

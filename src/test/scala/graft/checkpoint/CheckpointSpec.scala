@@ -21,27 +21,35 @@ class CheckpointSpec extends GraftSuite {
     MinRows(100),
     DistinctCountBetween("conv_id", 50, 70),
     QuantileBetween("turn_idx", 0.5, 0.0, 10000.0)))
-  // ~30 one-minute buckets per conversation: the STL kernel runs per slice
-  lazy val driftCheck = check.copy(constraints = check.constraints :+
-    TurnRateDrift(bucket = "1 minute", period = 7, residThreshold = 1.5))
+  // ~30 one-minute buckets per conversation: the STL kernel runs per slice;
+  // the rolling z-score of the turn gap fuses the UniqueKey census into
+  // its sorted kernel
+  lazy val driftCheck = check.copy(constraints = check.constraints ++ Seq(
+    TurnRateDrift(bucket = "1 minute", period = 7, residThreshold = 1.5),
+    RollingZDrift("turn_gap_s", window = 8, threshold = 2.0)))
+  // the bench suite's derived measure: seconds since the previous turn
+  lazy val gapped = transcripts.withColumn("turn_gap_s",
+    (unix_timestamp(col("ts")) - lag(unix_timestamp(col("ts")), 1).over(
+      org.apache.spark.sql.expressions.Window.partitionBy(col("conv_id"))
+        .orderBy(col("turn_idx")))).cast("double"))
 
   test("kill-after-k restart merges to single-run results") {
     val dir = Files.createTempDirectory("graft_cp").toString
     val r1 = new ResumableValidation(spark, dir, partitions = 4)
     // first attempt dies after 2 partitions
-    assert(r1.run(transcripts, driftCheck, ctx, maxPartitionsThisRun = 2).isEmpty)
+    assert(r1.run(gapped, driftCheck, ctx, maxPartitionsThisRun = 2).isEmpty)
     assert((0 until 4).count(r1.isDone) == 2)
     // restart: fresh instance, same checkpoint dir — finishes the rest
     val r2 = new ResumableValidation(spark, dir, partitions = 4)
     val Some((violations, verdicts, metrics)) =
-      r2.run(transcripts, driftCheck, ctx)
+      r2.run(gapped, driftCheck, ctx)
     assert(metrics.size == 4 && metrics.map(_.rows).sum == transcripts.count())
 
     // equals a single-shot run of the conversation-scoped constraints
-    val single = Validator.validate(transcripts, driftCheck.copy(constraints =
+    val single = Validator.validate(gapped, driftCheck.copy(constraints =
       driftCheck.constraints.filter {
         case _: UniqueKey | _: ReferentialIntegrity | _: NotNull |
-            _: TurnRateDrift => true
+            _: TurnRateDrift | _: RollingZDrift => true
         case _ => false
       }), ctx)
     val a = violations.orderBy("constraint", "conv_id", "turn_idx", "observed")
@@ -57,6 +65,9 @@ class CheckpointSpec extends GraftSuite {
     assert(da.size == 60 && da == db, s"drift verdicts differ: ${da.size} vs ${db.size}")
     assert(a.exists(_.getString(0) == "turn_rate_drift") &&
       da.exists(!_.getBoolean(2)), "drift compared nothing")
+    assert(a.exists(_.getString(0) == "rolling_z(turn_gap_s)") &&
+      a.exists(_.getString(0).startsWith("unique(")),
+      "rolling-z or the fused duplicate-key census compared nothing")
     single.unpersistAll()
 
     // aggregate verdicts from merged sketch state match full-data evaluation
