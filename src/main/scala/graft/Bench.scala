@@ -23,11 +23,11 @@ object Bench {
   /** tmpfs scratch root for shuffle files AND the generated bench tables
     * (see spark.local.dir note below). Overridable for hosts without shm.
     */
-  private[graft] val scratchRoot: String =
+  private val scratchRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_SCRATCH",
       if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_bench"
       else "/tmp/graft_bench")
-  private[graft] val localDir = s"$scratchRoot/spark_local"
+  private val localDir = s"$scratchRoot/spark_local"
 
   private def newSession(cpus: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -87,7 +87,7 @@ object Bench {
     * canonicalized plan) and the bench measures cache reads, not
     * constraint evaluation.
     */
-  private[graft] def runSuite(spark: SparkSession, dataPath: String): Long = {
+  private def runSuite(spark: SparkSession, dataPath: String): Long = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("conv_id")).orderBy(col("turn_idx"))
     val t = spark.read.parquet(dataPath)

@@ -14,24 +14,43 @@ import graft.series.{Decomposition, Drift, DriftKernel, RollingKernel}
   * src/geological_anomaly_detector.py:128-145; Catalyst won't fuse separate
   * `agg` jobs, so this planner does — SURVEY.md §4):
   *
-  *  pass 1  one fused global aggregation (stats, quantiles/sketches, null
-  *          counts, HLL cardinalities) — collected as ONE driver row;
-  *  pass 1b one more fused aggregation iff RobustZ needs MAD (median of
-  *          |x - median|) — the only stat that depends on another stat;
-  *  pass 2  one projection with every row-level flag, exploded into
-  *          violation rows (single scan); rolling-z flags and the fused
-  *          (key, order) duplicate-key census in ONE sorted kernel pass per
-  *          (conversation, chunk) over the pruned (key, order, value);
-  *  pass 3  uniqueness group-bys (one per key tuple);
-  *  pass 4  anti-joins, one per referenced dimension (broadcast by
-  *          default; shuffled sort-merge when `broadcastDim = false`
-  *          marks the dim too large to ship to executors);
-  *  pass 5  turn-rate drift: one bucket count, then ONE grouped kernel per
-  *          conversation (STL, residual fences, PSI, KS, verdict) into a
-  *          single persisted frame that violations and verdicts both read.
+  *  pass 0   schema conformance from plan metadata (zero jobs); a missing
+  *           declared column short-circuits the suite;
+  *  pass 1   one fused global aggregation (stats, quantiles/sketches, null
+  *           counts, HLL cardinalities, graded-rate fail counts, share,
+  *           correlation and freshness inputs) — collected as ONE driver
+  *           row;
+  *  pass 1b  one more fused aggregation iff RobustZ needs MAD (median of
+  *           |x - median|) — the only stat that depends on another stat;
+  *  pass 2   one projection with every row-level flag, exploded into
+  *           violation rows (single scan); rolling-z flags and the fused
+  *           (key, order) duplicate-key census in ONE sorted kernel pass
+  *           per (conversation, chunk) over the pruned (key, order, value);
+  *  pass 3   uniqueness group-bys (one per key tuple), then the index
+  *           density and turn-count group-bys per conversation;
+  *  pass 4   anti-joins, one per referenced big dimension (broadcast by
+  *           default; shuffled sort-merge when `broadcastDim = false`; the
+  *           key-census tier with `keyCensus = true`);
+  *  pass 5   turn-rate drift: one bucket count, then ONE grouped kernel per
+  *           conversation (STL, residual fences, PSI, KS, verdict) into a
+  *           single persisted frame that violations and verdicts both read;
+  *  pass 6   key-share skew guard (Misra–Gries sketch + exact recount);
+  *  pass 7   the sequence checks (gap, transitions, order, repeats) over
+  *           ONE shared exchange on the key;
+  *  pass 8   functional-dependency group-bys;
+  *  pass 9   point-in-time referential integrity (as-of joins);
+  *  pass 10+ the census families, one small collect each: distribution
+  *           drift, duplicate and near-duplicate rate, time-bucket
+  *           coverage, entropy, uniqueness/distinctness ratios, mutual
+  *           information.
   *
-  * Verdicts are per conversation for row/series constraints (the north
-  * rule's per-partition pass/fail) and global for aggregate constraints.
+  * Every global finding — the stats verdicts, the graded-rate `[global]`
+  * verdicts, the schema verdict, the key-share rows and the census
+  * families — is a driver-side [[GlobalOutcome]]: one verdict row plus the
+  * violation rows that explain it. validate() builds ONE violations frame
+  * and ONE verdicts frame from all of them, next to the row-level
+  * violations and the per-conversation verdicts (the north rule's
+  * per-partition pass/fail for row and series constraints).
   */
 object Validator {
 
@@ -68,7 +87,42 @@ object Validator {
     StructField("bound", StringType),
     StructField("severity", StringType)))
 
-  /** A compiled row-level check over the CURRENT row only. */
+  /** A global finding, assembled on the driver: its verdict row and the
+    * violation rows that explain it. A verdict read off the fused stats
+    * row sets `keyNullable = false`: while every global verdict is such a
+    * row, the verdicts' partition_key column stays non-nullable, as the
+    * per-conversation verdicts' is.
+    */
+  private final case class GlobalOutcome(constraint: String, pass: Boolean,
+      rows: Long, violations: Long, rate: Double, explained: Seq[Row] = Nil,
+      partitionKey: String = "(global)", keyNullable: Boolean = true)
+
+  private def outcomeViolations(spark: SparkSession,
+      outcomes: Seq[GlobalOutcome]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(outcomes.flatMap(_.explained).asJava,
+      violationSchema)
+  }
+
+  private def outcomeVerdicts(spark: SparkSession,
+      outcomes: Seq[GlobalOutcome]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(
+      outcomes.map(o => Row(o.partitionKey, o.constraint, o.pass, o.rows,
+        o.violations, o.rate)).asJava,
+      StructType(Seq(
+        StructField("partition_key", StringType,
+          outcomes.exists(_.keyNullable)),
+        StructField("constraint", StringType),
+        StructField("pass", BooleanType, nullable = false),
+        StructField("rows", LongType, nullable = false),
+        StructField("violations", LongType, nullable = false),
+        StructField("violation_rate", DoubleType, nullable = false))))
+  }
+
+  /** A compiled row-level check: its flag, observed value and bound, and
+    * the per-conversation violation rate its verdict tolerates.
+    */
   private[graft] final case class StatelessCheck(name: String,
       maxRate: Double, severity: String, column: String, violated: Column,
       observed: Column, bound: String)
@@ -262,21 +316,14 @@ object Validator {
       check.constraints.collect { case c: ExpectedSchema =>
         c -> schemaMismatches(df, c)
       }
-    val schemaViolationDfs: Seq[DataFrame] = schemaResults.map { case (c, ms) =>
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(
+    val schemaOutcomes = schemaResults.map { case (c, ms) =>
+      GlobalOutcome(c.name, ms.isEmpty, 0L, ms.size.toLong, 0.0,
         ms.map { case (n, obs, bnd) =>
-          Row(c.name, null, null, n, obs, bnd, c.severity) }.asJava,
-        violationSchema)
+          Row(c.name, null, null, n, obs, bnd, c.severity) })
     }
-    if (schemaResults.exists(_._2.exists(_._2 == "(missing)"))) {
-      import spark.implicits._
-      val verdicts = schemaResults.map { case (c, ms) =>
-        ("(global)", c.name, ms.isEmpty, 0L, ms.size.toLong, 0.0)
-      }.toDF("partition_key", "constraint", "pass", "rows", "violations",
-        "violation_rate")
-      return Result(schemaViolationDfs.reduce(_ unionByName _), verdicts)
-    }
+    if (schemaResults.exists(_._2.exists(_._2 == "(missing)")))
+      return Result(outcomeViolations(spark, schemaOutcomes),
+        outcomeVerdicts(spark, schemaOutcomes))
 
     // ---- pass 1: fused global aggregation --------------------------------
     val numericCols = (check.constraints.collect {
@@ -305,31 +352,22 @@ object Validator {
       .map { case ((c, q), needs) => (c, q, needs.forall(_._3)) }
       .toSeq.sortBy(t => (t._1, t._2))
 
-    // compliance fail counts and correlations fuse into the SAME one-pass
-    // aggregation: compliance is keyed by constraint position (two rules
-    // may share a label), correlation by the (x, y) column pair
-    val compCs: Seq[(Compliance, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: Compliance, i) => (c, i) }
-    val parsCs: Seq[(ParsableAs, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: ParsableAs, i) => (c, i) }
-    val piiCs: Seq[(NoPii, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: NoPii, i) => (c, i) }
-    val qualCs: Seq[(MinTextQuality, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: MinTextQuality, i) => (c, i) }
-    val vecCs: Seq[(VectorShape, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: VectorShape, i) => (c, i) }
-    val lenCs: Seq[(LengthBounds, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: LengthBounds, i) => (c, i) }
-    // the graded (maxFailRate > 0) instances of the classic hard-fail row
-    // families get a [global] rate verdict like Compliance's; rate-0
-    // instances keep their original verdict surface untouched (per-conv
-    // hard fail — and the flagship twins/goldens stay byte-identical)
-    val insetCs: Seq[(InSet, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: InSet, i) if c.maxFailRate > 0 => (c, i) }
-    val regexCs: Seq[(MatchesRegex, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: MatchesRegex, i) if c.maxFailRate > 0 => (c, i) }
-    val vbCs: Seq[(ValueBounds, Int)] = check.constraints.zipWithIndex
-      .collect { case (c: ValueBounds, i) if c.maxFailRate > 0 => (c, i) }
+    // graded-rate fail counts and correlations fuse into the SAME one-pass
+    // aggregation. A graded family gets a "[global]" rate verdict from one
+    // fail count per constraint position (two rules may bound one
+    // column), counted with the ONE compile site's predicate so the count
+    // can never drift from the per-row violations it summarizes. InSet,
+    // MatchesRegex and ValueBounds grade only at maxFailRate > 0: rate-0
+    // instances keep their per-conversation hard fail alone.
+    val graded: Seq[(StatelessCheck, Int)] =
+      check.constraints.zipWithIndex.flatMap {
+        case (c @ (_: Compliance | _: ParsableAs | _: NoPii |
+            _: MinTextQuality | _: VectorShape | _: LengthBounds), i) =>
+          compileStateless(Seq(c)).map(_ -> i)
+        case (c @ (_: InSet | _: MatchesRegex | _: ValueBounds), i) =>
+          compileStateless(Seq(c)).filter(_.maxRate > 0).map(_ -> i)
+        case _ => Nil
+      }
     // value share: one matched count per constraint position (two bounds
     // may target the same (column, value)) + a shared non-null census
     // per distinct column
@@ -353,38 +391,8 @@ object Validator {
 
     val aggExprs: Seq[Column] =
       Seq(count(lit(1)).as("__rows")) ++
-      compCs.map { case (c, i) =>
-        // fails closed; the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__comp__$i") } ++
-      parsCs.map { case (c, i) =>
-        // the ONE compile site's predicate, so the global count can never
-        // drift from the per-row violations it summarizes
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__pars__$i") } ++
-      piiCs.map { case (c, i) =>
-        // the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__pii__$i") } ++
-      qualCs.map { case (c, i) =>
-        // the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__qual__$i") } ++
-      vecCs.map { case (c, i) =>
-        // the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__vec__$i") } ++
-      lenCs.map { case (c, i) =>
-        // the ONE compile site's predicate, like ParsableAs
-        count(when(compileStateless(Seq(c)).head.violated, 1))
-          .as(s"__len__$i") } ++
-      (insetCs.map { case (c, i) => (c: Constraint, i, "__inset__") } ++
-        regexCs.map { case (c, i) => (c: Constraint, i, "__regex__") } ++
-        vbCs.map { case (c, i) => (c: Constraint, i, "__vb__") })
-        .map { case (c, i, prefix) =>
-          // the ONE compile site's predicate, like ParsableAs
-          count(when(compileStateless(Seq(c)).head.violated, 1))
-            .as(s"$prefix$i") } ++
+      graded.map { case (sc, i) =>
+        count(when(sc.violated, 1)).as(s"__fails__$i") } ++
       // value share: matched count per constraint + shared non-null
       // census per column (LanguageShare's shape, string-form equality)
       shareCs.map { case (c, i) =>
@@ -490,9 +498,107 @@ object Validator {
       }.toMap
     } else Map.empty
 
+    // ---- global outcomes ---------------------------------------------------
+    // every global finding, in pass order; each census pass below appends
+    // its own right after its jobs
+    val outcomes = scala.collection.mutable.ArrayBuffer.empty[GlobalOutcome]
+    // a census family's outcome: each breach (column, observed, bound) is
+    // one "(global)" violation row; it passes iff there is none
+    def breached(c: Constraint, rows: Long, rate: Double,
+        breaches: Iterable[(String, String, String)]): GlobalOutcome =
+      GlobalOutcome(c.name, breaches.isEmpty, rows, breaches.size.toLong,
+        rate, breaches.map { case (column, observed, bound) =>
+          Row(c.name, "(global)", -1, column, observed, bound, c.severity)
+        }.toSeq)
+    // a statistic bounded to [lo, hi]; an undefined value (None) is "no
+    // signal" and passes
+    def inRange(c: Constraint, column: String, value: Option[Double],
+        lo: Double, hi: Double, what: String, rows: Long,
+        rate: Double = 0.0): GlobalOutcome =
+      breached(c, rows, rate, value.filter(v => v < lo || v > hi)
+        .map(v => (column, v.toString, s"$what in [$lo,$hi]")))
+    def statVerdict(c: Constraint, pass: Boolean): GlobalOutcome =
+      GlobalOutcome(c.name, pass, totalRows, if (pass) 0L else 1L, 0.0,
+        keyNullable = false)
+    // a "[global]" fail-rate bound next to the per-conversation verdicts
+    def rateVerdict(name: String, fails: Double,
+        maxRate: Double): GlobalOutcome = {
+      val rate = fails / math.max(1.0, totalRows.toDouble)
+      GlobalOutcome(s"$name[global]", rate <= maxRate, totalRows,
+        fails.toLong, rate, keyNullable = false)
+    }
+
+    // straight from the stats row (no job): schema conformance (computed
+    // in pass 0), the stats bounds, the graded rates, correlation,
+    // freshness and the language / value shares
+    outcomes ++= schemaOutcomes.map(_.copy(rows = totalRows,
+      keyNullable = false))
+    outcomes ++= check.constraints.collect {
+      case c @ MinRows(n) => statVerdict(c, totalRows >= n)
+      case c @ MeanBetween(columnName, lo, hi) =>
+        val m = stat(s"__mean__$columnName")
+        statVerdict(c, m >= lo && m <= hi)
+      case c @ StddevBetween(columnName, lo, hi) =>
+        val s0 = stat(s"__stds__$columnName")
+        statVerdict(c, s0 >= lo && s0 <= hi)
+      case c @ QuantileBetween(columnName, q, lo, hi, _) =>
+        val v = stat(s"__q${q}__$columnName")
+        statVerdict(c, v >= lo && v <= hi)
+      case c @ DistinctCountBetween(columnName, lo, hi) =>
+        val v = stat(s"__hll__$columnName").toLong
+        statVerdict(c, v >= lo && v <= hi)
+      case c @ NotNull(columnName, maxRate) =>
+        rateVerdict(c.name, stat(s"__nulls__$columnName"), maxRate)
+    }
+    outcomes ++= graded.map { case (sc, i) =>
+      rateVerdict(sc.name, stat(s"__fails__$i"), sc.maxRate) }
+    outcomes ++= check.constraints.collect {
+      case c @ CorrelationBetween(x, y, lo, hi) =>
+        val cv = stat(s"__corrcv__${x}__${y}")
+        val sx = stat(s"__corrsx__${x}__${y}")
+        val sy = stat(s"__corrsy__${x}__${y}")
+        // undefined r (constant column / <2 usable rows) is "no signal"
+        // and passes — constancy is StddevBetween's finding
+        inRange(c, s"$x,$y",
+          Option.when(!cv.isNaN && sx > 0 && sy > 0)(cv / (sx * sy)),
+          lo, hi, "corr", totalRows)
+      case c @ MaxStaleness(columnName, _, maxLag) =>
+        val maxTs = stat(s"__maxts__$columnName")
+        // NaN max = empty table (or all-null column): no newest row, "no
+        // signal", passes — emptiness is MinRows' finding. Data newer
+        // than asOf gives a NEGATIVE lag and passes (future skew is
+        // Monotonic/Compliance's finding). asOf is read in the SESSION
+        // zone — the zone the NTZ→TS cast in the fused agg applied — so
+        // the offset cancels and lag is wall-clock-true in any zone.
+        val zone = java.time.ZoneId.of(
+          spark.sessionState.conf.sessionLocalTimeZone)
+        val lagSec = Option.when(!maxTs.isNaN)(
+          (c.asOfMicrosIn(zone) - maxTs) / 1e6)
+        breached(c, totalRows, 0.0, lagSec.filter(_ > maxLag).map(l =>
+          (columnName, l.toString, s"lag<=${maxLag}s as of ${c.asOf}")))
+      case c @ LanguageShare(columnName, lang, lo, hi) =>
+        // empty census (no non-null rows): no mix to bound, "no
+        // signal", passes — emptiness is MinRows'/NotNull's finding
+        val n = stat(s"__langn__$columnName")
+        val share = Option.when(!n.isNaN && n != 0.0)(
+          stat(s"__lang__${columnName}__$lang") / n)
+        inRange(c, columnName, share, lo, hi, s"share($lang)", totalRows,
+          share.getOrElse(0.0))
+    }
+    // value share: the categorical-mix bound, LanguageShare's shape
+    outcomes ++= shareCs.map { case (c, i) =>
+      val n = stat(s"__sharen__${c.column}")
+      val share = Option.when(!n.isNaN && n != 0.0)(stat(s"__share__$i") / n)
+      inRange(c, c.column, share, c.lo, c.hi, s"share(${c.value})",
+        totalRows, share.getOrElse(0.0))
+    }
+
     // ---- pass 2: row-level flags → violation rows -------------------------
-    case class RowCheck(c: Constraint, column: String, violated: Column,
-        observed: Column, bound: String)
+    // a row check outside the stateless subset: hard fail per conversation
+    def rowCheck(c: Constraint, column: String, violated: Column,
+        observed: Column, bound: String): StatelessCheck =
+      StatelessCheck(c.name, 0.0, c.severity, column, violated, observed,
+        bound)
 
     // small dimensions compile REFERENTIAL INTEGRITY to an inline isin row
     // check fused into the single row-flags projection — no anti-join
@@ -541,7 +647,7 @@ object Validator {
         (if (probe != null && probe.length <= 1024) probe.toSeq else null)
     }
 
-    val rowChecks: Seq[RowCheck] = check.constraints.flatMap {
+    val rowChecks: Seq[StatelessCheck] = check.constraints.flatMap {
       case c @ ReferentialIntegrity(columnName, dimName, dimCol, nullOk, _, census)
           if !census && inlineDimValues((dimName, dimCol)) != null =>
         val values = inlineDimValues((dimName, dimCol))
@@ -551,7 +657,7 @@ object Validator {
         val in = col(columnName).isin(values: _*)
         val violated = if (nullOk) col(columnName).isNotNull && !coalesce(in, lit(false))
           else col(columnName).isNull || !coalesce(in, lit(false))
-        Some(RowCheck(c, columnName, violated, col(columnName),
+        Seq(rowCheck(c, columnName, violated, col(columnName),
           s"in dim $dimName.$dimCol"))
       // the stateless families compile through the ONE shared site
       // the streaming face also uses (batch/stream semantic parity by
@@ -559,18 +665,17 @@ object Validator {
       case c @ (_: NotNull | _: InSet | _: MatchesRegex | _: ValueBounds |
           _: TextEquals | _: Compliance | _: ParsableAs | _: NoPii |
           _: MinTextQuality | _: VectorShape | _: LengthBounds) =>
-        val sc = compileStateless(Seq(c)).head
-        Some(RowCheck(c, sc.column, sc.violated, sc.observed, sc.bound))
+        compileStateless(Seq(c))
       case c @ GlobalZ(columnName, t) =>
         val mu = stat(s"__mean__$columnName"); val sd = stat(s"__stdp__$columnName")
         val z = (col(columnName) - mu) / sd
-        Some(RowCheck(c, columnName,
+        Seq(rowCheck(c, columnName,
           if (sd > 0) abs(z) > t else lit(false),
           col(columnName).cast("string"), s"|z|<=$t"))
       case c @ RobustZ(columnName, t, _) =>
         val med = stat(s"__q0.5__$columnName"); val mad = mads(columnName)
         val rz = lit(0.6745) * (col(columnName) - med) / mad
-        Some(RowCheck(c, columnName,
+        Seq(rowCheck(c, columnName,
           if (mad > 0) abs(rz) > t else lit(false),
           col(columnName).cast("string"), s"|rz|<=$t"))
       case c @ IqrOutliers(columnName, k, _) =>
@@ -580,17 +685,18 @@ object Validator {
         // region — Spark sorts NaN greatest) degrade to "no signal" like
         // GlobalZ's sd>0 / RobustZ's mad>0 guards: `v < NaN` is TRUE for
         // every non-NaN value, which would flag every healthy row
-        Some(RowCheck(c, columnName,
+        Seq(rowCheck(c, columnName,
           if (lo.isNaN || hi.isNaN) lit(false)
           else col(columnName) < lo || col(columnName) > hi,
           col(columnName).cast("string"), s"[$lo,$hi]"))
-      case _ => None
+      case _ => Nil
     }
 
-    def explodeViolations(base: DataFrame, checks: Seq[RowCheck]): DataFrame =
+    def explodeViolations(base: DataFrame,
+        checks: Seq[StatelessCheck]): DataFrame =
       explodeChecks(base, check.keyCol, check.orderCol,
         checks.map(rc =>
-          (rc.c.name, rc.column, rc.observed, rc.bound, rc.c.severity,
+          (rc.name, rc.column, rc.observed, rc.bound, rc.severity,
             rc.violated)))
 
     // plain row flags: shuffle-free projection over the scan
@@ -733,11 +839,10 @@ object Validator {
     // graft.agg.FreqItems): two extra scans per constraint, O(k) state, no
     // full-table groupBy. Offenders are ≤ 1/maxFrac keys by pigeonhole, so
     // collecting them to build verdict rows is bounded by construction.
-    val keyShareVerdicts: Seq[DataFrame] = check.constraints.collect {
+    outcomes ++= check.constraints.collect {
       case c: MaxKeyShare =>
         require(c.k >= 2.0 / c.maxFrac,
           s"${c.name}: k=${c.k} below the 2/maxFrac guarantee bound")
-        import spark.implicits._
         // the census shares, thresholds, and rates are all over the
         // NON-NULL key count (census.n) — one consistent denominator;
         // a null mega-key is NotNull's finding, not this constraint's
@@ -746,15 +851,12 @@ object Validator {
         val nKeys = math.max(1L, census.n)
         val hot = census.hot
           .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-        val perKey = hot.map { case (k0, cnt) =>
-          (k0, c.name, false, cnt, cnt, cnt.toDouble / nKeys.toDouble)
-        }
-        val global = ("(global)", c.name, hot.isEmpty, census.n,
-          hot.size.toLong, hot.size.toDouble / nKeys.toDouble)
-        (perKey :+ global)
-          .toDF("partition_key", "constraint", "pass", "rows", "violations",
-            "violation_rate")
-    }
+        hot.map { case (k0, cnt) =>
+          GlobalOutcome(c.name, false, cnt, cnt, cnt.toDouble / nKeys.toDouble,
+            partitionKey = k0)
+        } :+ GlobalOutcome(c.name, hot.isEmpty, census.n, hot.size.toLong,
+          hot.size.toDouble / nKeys.toDouble)
+    }.flatten
 
     // ---- pass 7: fused sequence pass (ONE shared exchange) ------------------
     // MaxSessionGap / AllowedTransitions / Monotonic / NoConsecutiveRepeats
@@ -800,9 +902,9 @@ object Validator {
         val aug = if (transCs.nonEmpty)
           aug0.withColumn("__seq_rn", row_number().over(wOrd))
         else aug0
-        val checks: Seq[RowCheck] =
+        val checks: Seq[StatelessCheck] =
           gapCs.map { c =>
-            RowCheck(c, check.tsCol,
+            rowCheck(c, check.tsCol,
               coalesce(col("__gap_us") > c.maxGapSeconds * 1000000L,
                 lit(false)),
               col("__gap_us") / lit(1e6), s"gap<=${c.maxGapSeconds}s")
@@ -819,7 +921,7 @@ object Validator {
                 curr.isNotNull && !curr.isin(opening: _*)
               case None => lit(false)
             }
-            RowCheck(c, c.column,
+            rowCheck(c, c.column,
               coalesce(when(col("__seq_rn") === 1, firstViol)
                 .otherwise(midViol), lit(false)),
               when(col("__seq_rn") === 1, curr)
@@ -832,21 +934,21 @@ object Validator {
             val curr = col(c.column)
             val prev = col(lagAlias(c.column))
             val broke = if (c.strict) curr <= prev else curr < prev
-            RowCheck(c, c.column,
+            rowCheck(c, c.column,
               coalesce(prev.isNotNull && curr.isNotNull && broke, lit(false)),
               curr, if (c.strict) "increasing" else "non-decreasing")
           } ++
           repCs.map { c =>
             val h = col(digestAlias(c.column))
             val ph = col(lagAlias(digestAlias(c.column)))
-            RowCheck(c, c.column,
+            rowCheck(c, c.column,
               coalesce(ph.isNotNull && h.isNotNull && h === ph, lit(false)),
               h, "differs from previous")
           }
         Seq(explodeViolations(aug, checks))
       }
 
-    // ---- pass 9: functional dependencies (one hash aggregation each) --------
+    // ---- pass 8: functional dependencies (one hash aggregation each) -------
     // groupBy determinant → count(distinct dependent), partial-agg
     // friendly; a group with >1 dependent value is one violation row with
     // the census observed. Null determinant components are skipped (a null
@@ -868,7 +970,7 @@ object Validator {
             lit(c.severity).as("severity"))
     }
 
-    // ---- pass 8: point-in-time referential integrity ------------------------
+    // ---- pass 9: point-in-time referential integrity ------------------------
     // the as-of join resolves each turn against the newest snapshot at or
     // before its ts; an unresolved marker is the violation. Fact side is
     // pruned to 4 scalar columns before either tier (the shuffle tier
@@ -899,136 +1001,99 @@ object Validator {
             lit(c.severity).as("severity"))
     }
 
-    // ---- pass 9: distribution drift vs a reference table --------------------
+    // ---- pass 10: distribution drift vs a reference table ------------------
     // PSI of the validated column against a blessed baseline dimension —
     // the snapshot-regression check. One quantile pass over the baseline,
     // a broadcast of its bins−1 edges, a codegen'd bin lambda over the
     // current side; the single PSI row collects on the driver like the
     // fused global stats (a 1-row aggregate, sanctioned).
-    val distDriftResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ DistributionDrift(columnName, dimName, dimCol, maxPsi, bins,
-            maxKs) =>
-          val dim = ctx.dims.getOrElse(dimName,
-            throw new IllegalArgumentException(
-              s"dimension '$dimName' not registered"))
-          val sided = dim
-            .select(col(dimCol).cast("double").as("__v"))
+    outcomes ++= check.constraints.collect {
+      case c @ DistributionDrift(columnName, dimName, dimCol, maxPsi, bins,
+          maxKs) =>
+        val dim = ctx.dims.getOrElse(dimName,
+          throw new IllegalArgumentException(
+            s"dimension '$dimName' not registered"))
+        val sided = dim
+          .select(col(dimCol).cast("double").as("__v"))
+          .where(col("__v").isNotNull && !isnan(col("__v")))
+          .withColumn("__side", lit("baseline"))
+          .unionByName(df
+            .select(col(columnName).cast("double").as("__v"))
             .where(col("__v").isNotNull && !isnan(col("__v")))
-            .withColumn("__side", lit("baseline"))
-            .unionByName(df
-              .select(col(columnName).cast("double").as("__v"))
-              .where(col("__v").isNotNull && !isnan(col("__v")))
-              .withColumn("__side", lit("current")))
-            .withColumn("__k", lit(1))
-          // ONE distinct-value side census feeds both the PSI and the KS
-          // collect; persisted across the two actions when KS is on, so
-          // the raw sides are scanned once per suite instead of once per
-          // statistic. The census is bounded by the DISTINCT value count
-          // (not rows) — far smaller than the r5-rejected idea of caching
-          // the raw `sided` union; at the 10^12-row continuous-value
-          // extreme (census ~ rows) the documented scale path remains
-          // Drift.ksSketch, as before.
-          val census = graft.series.Drift
-            .sideCensus(sided, "__v", "__side", Seq("__k"))
-          if (maxKs.isDefined)
-            census.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val psiRows = graft.series.Drift
-            .psiFromCensus(census, Seq("__k"), bins)
-            .select(col("psi"), col("n_cur")).collect()
-          // null / absent PSI = one side empty after null-scrub: "no
-          // signal", passes — emptiness is MinRows' finding
-          val psiVal: Option[Double] =
-            if (psiRows.isEmpty || psiRows(0).isNullAt(0)) None
-            else Some(psiRows(0).getDouble(0))
-          // KS half (opt-in): exact tie-correct two-sample D over the
-          // same persisted census
-          val ksVal: Option[Double] = maxKs.flatMap { _ =>
-            val rows = graft.series.Drift
-              .ksFromCensus(census, Seq("__k"))
-              .select(col("ks")).collect()
-            if (rows.isEmpty || rows(0).isNullAt(0)) None
-            else Some(rows(0).getDouble(0))
-          }
-          if (maxKs.isDefined) census.unpersist()
-          val psiFailed = psiVal.exists(_ > maxPsi)
-          val ksFailed = (maxKs, ksVal) match {
-            case (Some(mk), Some(k)) => k > mk
-            case _ => false
-          }
-          val breaches: Seq[(String, String)] =
-            (if (psiFailed) Seq(psiVal.get.toString ->
-              s"psi<=$maxPsi vs $dimName.$dimCol") else Nil) ++
-            (if (ksFailed) Seq(ksVal.get.toString ->
-              s"ks<=${maxKs.get} vs $dimName.$dimCol") else Nil)
-          val violationDf: Option[DataFrame] =
-            if (breaches.isEmpty) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                breaches.map { case (obs, bound) =>
-                  Row(c.name, "(global)", -1, columnName, obs, bound,
-                    c.severity) }.asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          // rows = the current side's census, not the fused-stats
-          // totalRows: a drift-only suite never runs the stats pass and a
-          // hardcoded 0 would read as "nothing scanned" (entropy precedent)
-          val curN =
-            if (psiRows.isEmpty || psiRows(0).isNullAt(1)) 0L
-            else psiRows(0).getLong(1)
-          val verdictDf = Seq(("(global)", c.name, breaches.isEmpty, curN,
-              breaches.size.toLong, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+            .withColumn("__side", lit("current")))
+          .withColumn("__k", lit(1))
+        // ONE distinct-value side census feeds both the PSI and the KS
+        // collect; persisted across the two actions when KS is on, so
+        // the raw sides are scanned once per suite instead of once per
+        // statistic. The census is bounded by the DISTINCT value count
+        // (not rows) — far smaller than the r5-rejected idea of caching
+        // the raw `sided` union; at the 10^12-row continuous-value
+        // extreme (census ~ rows) the documented scale path remains
+        // Drift.ksSketch, as before.
+        val census = graft.series.Drift
+          .sideCensus(sided, "__v", "__side", Seq("__k"))
+        if (maxKs.isDefined)
+          census.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val psiRows = graft.series.Drift
+          .psiFromCensus(census, Seq("__k"), bins)
+          .select(col("psi"), col("n_cur")).collect()
+        // null / absent PSI = one side empty after null-scrub: "no
+        // signal", passes — emptiness is MinRows' finding
+        val psiVal: Option[Double] =
+          if (psiRows.isEmpty || psiRows(0).isNullAt(0)) None
+          else Some(psiRows(0).getDouble(0))
+        // KS half (opt-in): exact tie-correct two-sample D over the
+        // same persisted census
+        val ksVal: Option[Double] = maxKs.flatMap { _ =>
+          val rows = graft.series.Drift
+            .ksFromCensus(census, Seq("__k"))
+            .select(col("ks")).collect()
+          if (rows.isEmpty || rows(0).isNullAt(0)) None
+          else Some(rows(0).getDouble(0))
+        }
+        if (maxKs.isDefined) census.unpersist()
+        // rows = the current side's census, not the fused-stats
+        // totalRows: a drift-only suite never runs the stats pass and a
+        // hardcoded 0 would read as "nothing scanned" (entropy precedent)
+        val curN =
+          if (psiRows.isEmpty || psiRows(0).isNullAt(1)) 0L
+          else psiRows(0).getLong(1)
+        breached(c, curN, 0.0,
+          psiVal.filter(_ > maxPsi).map(p =>
+            (columnName, p.toString, s"psi<=$maxPsi vs $dimName.$dimCol")) ++
+          maxKs.flatMap(mk => ksVal.filter(_ > mk).map(k =>
+            (columnName, k.toString, s"ks<=$mk vs $dimName.$dimCol"))))
+    }
 
-    // ---- pass 10: duplicate-rate bound ---------------------------------------
+    // ---- pass 10b: duplicate-rate bound --------------------------------------
     // (n − distinct)/n over non-null values of the column, the declarative
     // face of exact/normalized dedup. Rows reduce map-side to a 16-byte
     // digest (the value itself never rides the shuffle); the exact tier is
     // a two-stage hash aggregation over digests, the approx tier a single
     // HLL aggregate with O(1) state. One-row collect, like the fused stats.
-    val dupRateResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ MaxDuplicateRate(columnName, maxRate, normalized, approx) =>
-          val digest =
-            if (normalized)
-              graft.text.TextAnalysis.fingerprint(col(columnName).cast("string"))
-            else md5(col(columnName).cast("string"))
-          val base = df.where(col(columnName).isNotNull)
-            .select(digest.as("__digest"))
-          val distinctAgg =
-            if (approx) approx_count_distinct(col("__digest")).as("d")
-            else countDistinct(col("__digest")).as("d")
-          val row = base.agg(count(lit(1)).as("n"), distinctAgg).collect()(0)
-          val n = row.getLong(0)
-          val d = row.getLong(1)
-          // HLL can overshoot n on small inputs — a negative "rate" is noise
-          val rate = if (n == 0L) 0.0
-            else math.max(0.0, (n - d).toDouble / n.toDouble)
-          val failed = n > 0L && rate > maxRate
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  rate.toString, s"dup_rate<=$maxRate", c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          // rows = the dup census (non-null values examined), not the
-          // fused-stats totalRows — a dup-rate-only suite never runs the
-          // stats pass and a hardcoded 0 would read as "nothing scanned"
-          val verdictDf = Seq(("(global)", c.name, !failed, n,
-              if (failed) 1L else 0L, rate))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+    outcomes ++= check.constraints.collect {
+      case c @ MaxDuplicateRate(columnName, maxRate, normalized, approx) =>
+        val digest =
+          if (normalized)
+            graft.text.TextAnalysis.fingerprint(col(columnName).cast("string"))
+          else md5(col(columnName).cast("string"))
+        val base = df.where(col(columnName).isNotNull)
+          .select(digest.as("__digest"))
+        val distinctAgg =
+          if (approx) approx_count_distinct(col("__digest")).as("d")
+          else countDistinct(col("__digest")).as("d")
+        val row = base.agg(count(lit(1)).as("n"), distinctAgg).collect()(0)
+        val n = row.getLong(0)
+        val d = row.getLong(1)
+        // HLL can overshoot n on small inputs — a negative "rate" is noise
+        val rate = if (n == 0L) 0.0
+          else math.max(0.0, (n - d).toDouble / n.toDouble)
+        // rows = the dup census (non-null values examined), not the
+        // fused-stats totalRows — a dup-rate-only suite never runs the
+        // stats pass and a hardcoded 0 would read as "nothing scanned"
+        breached(c, n, rate, Option.when(n > 0L && rate > maxRate)(
+          (columnName, rate.toString, s"dup_rate<=$maxRate")))
+    }
 
     // ---- pass 10c: time-bucket coverage ---------------------------------------
     // one hash aggregation on the truncated bucket (only the bucket
@@ -1036,489 +1101,258 @@ object Validator {
     // collected driver-side — bounded by span/bucket, the constraint's
     // documented contract — and the span-complete bucket axis is walked
     // in fixed UTC steps so a silent mid-range hole (count 0) surfaces
-    val coverageResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ TimeBucketCoverage(columnName, bucket, minRowsBound) =>
-          val stepSec = bucket match {
-            case "minute" => 60L
-            case "hour" => 3600L
-            case "day" => 86400L
-            case "week" => 604800L
+    outcomes ++= check.constraints.collect {
+      case c @ TimeBucketCoverage(columnName, bucket, minRowsBound) =>
+        val stepSec = bucket match {
+          case "minute" => 60L
+          case "hour" => 3600L
+          case "day" => 86400L
+          case "week" => 604800L
+        }
+        // DST guard (r5 ADVICE): date_trunc uses the SESSION zone while
+        // the axis below steps fixed epoch seconds — under a
+        // DST-observing zone, day/week truncation shifts by an hour
+        // twice a year and healthy buckets would report starved. Refuse
+        // loudly at bucket >= day unless the session zone is
+        // fixed-offset (mains pin UTC; this makes the library enforce
+        // what the mains assumed).
+        if (stepSec >= 86400L) {
+          val zone = spark.conf.get("spark.sql.session.timeZone")
+          val rules = java.time.ZoneId.of(zone).getRules
+          require(rules.isFixedOffset,
+            s"time_bucket_coverage($bucket) needs a fixed-offset session " +
+              s"timeZone (got '$zone'): DST shifts would misalign the " +
+              "fixed-step bucket axis and report false starvation")
+        }
+        // cast("timestamp") first: date_trunc/unix_timestamp on an NTZ
+        // column (the MaxStaleness discipline; identity under the UTC
+        // session zone)
+        val censusRows = df.where(col(columnName).isNotNull)
+          .groupBy(date_trunc(bucket,
+            col(columnName).cast("timestamp")).as("__b"))
+          .agg(count(lit(1)).as("__n"))
+          .select(unix_timestamp(col("__b")).as("__e"), col("__n"))
+          .collect()
+        val census = censusRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+        // span cap (r5 ADVICE/VERDICT item 5): ONE corrupt timestamp
+        // (epoch 0) makes span/bucket enormous — a minute census over
+        // decades would materialize tens of millions of driver tuples
+        // and a comparably huge violation frame. Refuse loudly past the
+        // cap instead of silently thrashing the driver; the bound is
+        // config-tunable for genuinely long healthy spans.
+        val maxSpanBuckets = spark.conf
+          .getOption("spark.graft.coverage.maxSpanBuckets")
+          .map(_.toLong).getOrElse(1000000L)
+        if (census.nonEmpty) {
+          val span = (census.keys.max - census.keys.min) / stepSec + 1L
+          require(span <= maxSpanBuckets,
+            s"time_bucket_coverage($bucket) span is $span buckets > cap " +
+              s"$maxSpanBuckets (spark.graft.coverage.maxSpanBuckets) — " +
+              "likely a corrupt timestamp; bound the column's range " +
+              "(value_bounds / freshness) or coarsen the bucket first")
+        }
+        val starved: Seq[(Long, Long)] =
+          if (census.isEmpty) Nil
+          else {
+            val lo = census.keys.min
+            val hi = census.keys.max
+            (lo to hi by stepSec).iterator
+              .map(e => e -> census.getOrElse(e, 0L))
+              .filter(_._2 < minRowsBound).toSeq
           }
-          // DST guard (r5 ADVICE): date_trunc uses the SESSION zone while
-          // the axis below steps fixed epoch seconds — under a
-          // DST-observing zone, day/week truncation shifts by an hour
-          // twice a year and healthy buckets would report starved. Refuse
-          // loudly at bucket >= day unless the session zone is
-          // fixed-offset (mains pin UTC; this makes the library enforce
-          // what the mains assumed).
-          if (stepSec >= 86400L) {
-            val zone = spark.conf.get("spark.sql.session.timeZone")
-            val rules = java.time.ZoneId.of(zone).getRules
-            require(rules.isFixedOffset,
-              s"time_bucket_coverage($bucket) needs a fixed-offset session " +
-                s"timeZone (got '$zone'): DST shifts would misalign the " +
-                "fixed-step bucket axis and report false starvation")
-          }
-          // cast("timestamp") first: date_trunc/unix_timestamp on an NTZ
-          // column (the MaxStaleness discipline; identity under the UTC
-          // session zone)
-          val censusRows = df.where(col(columnName).isNotNull)
-            .groupBy(date_trunc(bucket,
-              col(columnName).cast("timestamp")).as("__b"))
-            .agg(count(lit(1)).as("__n"))
-            .select(unix_timestamp(col("__b")).as("__e"), col("__n"))
-            .collect()
-          val census = censusRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
-          // span cap (r5 ADVICE/VERDICT item 5): ONE corrupt timestamp
-          // (epoch 0) makes span/bucket enormous — a minute census over
-          // decades would materialize tens of millions of driver tuples
-          // and a comparably huge violation frame. Refuse loudly past the
-          // cap instead of silently thrashing the driver; the bound is
-          // config-tunable for genuinely long healthy spans.
-          val maxSpanBuckets = spark.conf
-            .getOption("spark.graft.coverage.maxSpanBuckets")
-            .map(_.toLong).getOrElse(1000000L)
-          if (census.nonEmpty) {
-            val span = (census.keys.max - census.keys.min) / stepSec + 1L
-            require(span <= maxSpanBuckets,
-              s"time_bucket_coverage($bucket) span is $span buckets > cap " +
-                s"$maxSpanBuckets (spark.graft.coverage.maxSpanBuckets) — " +
-                "likely a corrupt timestamp; bound the column's range " +
-                "(value_bounds / freshness) or coarsen the bucket first")
-          }
-          val starved: Seq[(Long, Long)] =
-            if (census.isEmpty) Nil
-            else {
-              val lo = census.keys.min
-              val hi = census.keys.max
-              (lo to hi by stepSec).iterator
-                .map(e => e -> census.getOrElse(e, 0L))
-                .filter(_._2 < minRowsBound).toSeq
-            }
-          val fmt = java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM-dd HH:mm:ss")
-            .withZone(java.time.ZoneOffset.UTC)
-          val violationDf: Option[DataFrame] =
-            if (starved.isEmpty) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                starved.map { case (e, n) =>
-                  Row(c.name, "(global)", -1, columnName,
-                    s"${fmt.format(java.time.Instant.ofEpochSecond(e))} n=$n",
-                    s"every $bucket >= $minRowsBound rows", c.severity)
-                }.asJava, violationSchema))
-            }
-          import spark.implicits._
-          // rows = the coverage census (non-null timestamps examined);
-          // violation_rate = starved share of the span's buckets
-          val spanBuckets: Long =
-            if (census.isEmpty) 0L
-            else (census.keys.max - census.keys.min) / stepSec + 1L
-          val verdictDf = Seq(("(global)", c.name, starved.isEmpty,
-              census.values.sum, starved.size.toLong,
-              if (spanBuckets == 0L) 0.0
-              else starved.size.toDouble / spanBuckets))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+        val fmt = java.time.format.DateTimeFormatter
+          .ofPattern("yyyy-MM-dd HH:mm:ss")
+          .withZone(java.time.ZoneOffset.UTC)
+        // rows = the coverage census (non-null timestamps examined);
+        // violation_rate = starved share of the span's buckets
+        val spanBuckets: Long =
+          if (census.isEmpty) 0L
+          else (census.keys.max - census.keys.min) / stepSec + 1L
+        breached(c, census.values.sum,
+          if (spanBuckets == 0L) 0.0
+          else starved.size.toDouble / spanBuckets,
+          starved.map { case (e, n) => (columnName,
+            s"${fmt.format(java.time.Instant.ofEpochSecond(e))} n=$n",
+            s"every $bucket >= $minRowsBound rows") })
+    }
 
-    // ---- pass 10b: near-duplicate rate bound ----------------------------------
+    // ---- pass 10d: near-duplicate rate bound ----------------------------------
     // the full minhash → LSH banding → exact-Jaccard-verify chain (the
     // audited q64 shape) with the suite's (key, ord) composite as the doc
     // id, digest-reduced map-side so the key text never rides the dedup
     // shuffles. Rate = docs with ≥1 verified near-dup / non-null docs.
-    val nearDupResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ MaxNearDuplicateRate(columnName, maxRate, threshold,
-            shingleK, numHashes, bands, estJaccardMin) =>
-          // fixed-width md5 per component (no separator ambiguity), outer
-          // md5 for a compact 32-char id — the ratioCensusFrame discipline
-          val base = df.where(col(columnName).isNotNull)
-            .select(md5(concat(
-                md5(key.cast("string").cast("binary")),
-                md5(ord.cast("string").cast("binary"))).cast("binary"))
-                .as("__nd_id"),
-              col(columnName))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          // census = distinct doc NODES: duplicate (key, ord) rows collapse
-          // into one node everywhere in the chain (signatures AND the
-          // exact verifier both take the shingle-set UNION over a node's
-          // rows), so the denominator must collapse them too or the
-          // rate deflates under exact-dup keys
-          // the node census and the dedup chain are independent jobs over
-          // the persisted base — run the census from a driver thread so
-          // the two overlap (guide §2.6) instead of serializing
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val nFuture = Future(base.select("__nd_id").distinct().count())(
-            ExecutionContext.global)
-          // the dedup helpers persist their internal frames (signatures,
-          // banded pairs, candidate shingles) for the chain's duration;
-          // collect them so THIS pass can honor the Result.cached
-          // contract — every count below is materialized eagerly, so all
-          // of them release right here rather than riding Result.cached
-          val chainCached = scala.collection.mutable.Buffer.empty[DataFrame]
-          val flagged: Long = {
-            val sigs = graft.dedup.Dedup.minhashSignatures(base, "__nd_id",
-              columnName, shingleK, numHashes)
-            // est prefilter dominated by exact verification when its
-            // bound sits at or below the verify threshold (the dupGroups
-            // tiering rule) — banding-only candidates, two fewer joins
-            val cands =
-              if (estJaccardMin <= threshold)
-                graft.dedup.Dedup.minhashBandPairs(sigs, "__nd_id", bands,
-                  sigLen = numHashes)
-              else graft.dedup.Dedup.minhashLshCandidates(sigs,
-                "__nd_id", bands, estJaccardMin, chainCached += _,
-                sigLen = numHashes).select("a_id", "b_id")
-            val verified = graft.dedup.Dedup.verifyJaccard(base,
-              cands, "__nd_id", columnName, shingleK,
-              threshold, chainCached += _)
-            // endpoints of verified pairs = docs with >=1 near-duplicate
-            verified.select(col("a_id").as("__vid"))
-              .union(verified.select(col("b_id"))).distinct().count()
-          }
-          val n = Await.result(nFuture, Duration.Inf)
-          chainCached.foreach(_.unpersist())
-          base.unpersist()
-          val rate = if (n == 0L) 0.0 else flagged.toDouble / n.toDouble
-          val failed = n > 0L && rate > maxRate
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  rate.toString, s"near_dup_rate<=$maxRate@j>=$threshold",
-                  c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          // rows = the dedup census (non-null docs), the dup-rate precedent
-          val verdictDf = Seq(("(global)", c.name, !failed, n,
-              if (failed) 1L else 0L, rate))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+    outcomes ++= check.constraints.collect {
+      case c @ MaxNearDuplicateRate(columnName, maxRate, threshold,
+          shingleK, numHashes, bands, estJaccardMin) =>
+        // fixed-width md5 per component (no separator ambiguity), outer
+        // md5 for a compact 32-char id — the ratioCensusFrame discipline
+        val base = df.where(col(columnName).isNotNull)
+          .select(md5(concat(
+              md5(key.cast("string").cast("binary")),
+              md5(ord.cast("string").cast("binary"))).cast("binary"))
+              .as("__nd_id"),
+            col(columnName))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // census = distinct doc NODES: duplicate (key, ord) rows collapse
+        // into one node everywhere in the chain (signatures AND the
+        // exact verifier both take the shingle-set UNION over a node's
+        // rows), so the denominator must collapse them too or the
+        // rate deflates under exact-dup keys
+        // the node census and the dedup chain are independent jobs over
+        // the persisted base — run the census from a driver thread so
+        // the two overlap (guide §2.6) instead of serializing
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        import scala.concurrent.duration.Duration
+        val nFuture = Future(base.select("__nd_id").distinct().count())(
+          ExecutionContext.global)
+        // the dedup helpers persist their internal frames (signatures,
+        // banded pairs, candidate shingles) for the chain's duration;
+        // collect them so THIS pass can honor the Result.cached
+        // contract — every count below is materialized eagerly, so all
+        // of them release right here rather than riding Result.cached
+        val chainCached = scala.collection.mutable.Buffer.empty[DataFrame]
+        val flagged: Long = {
+          val sigs = graft.dedup.Dedup.minhashSignatures(base, "__nd_id",
+            columnName, shingleK, numHashes)
+          // est prefilter dominated by exact verification when its
+          // bound sits at or below the verify threshold (the dupGroups
+          // tiering rule) — banding-only candidates, two fewer joins
+          val cands =
+            if (estJaccardMin <= threshold)
+              graft.dedup.Dedup.minhashBandPairs(sigs, "__nd_id", bands,
+                sigLen = numHashes)
+            else graft.dedup.Dedup.minhashLshCandidates(sigs,
+              "__nd_id", bands, estJaccardMin, chainCached += _,
+              sigLen = numHashes).select("a_id", "b_id")
+          val verified = graft.dedup.Dedup.verifyJaccard(base,
+            cands, "__nd_id", columnName, shingleK,
+            threshold, chainCached += _)
+          // endpoints of verified pairs = docs with >=1 near-duplicate
+          verified.select(col("a_id").as("__vid"))
+            .union(verified.select(col("b_id"))).distinct().count()
+        }
+        val n = Await.result(nFuture, Duration.Inf)
+        chainCached.foreach(_.unpersist())
+        base.unpersist()
+        val rate = if (n == 0L) 0.0 else flagged.toDouble / n.toDouble
+        // rows = the dedup census (non-null docs), the dup-rate precedent
+        breached(c, n, rate, Option.when(n > 0L && rate > maxRate)(
+          (columnName, rate.toString,
+            s"near_dup_rate<=$maxRate@j>=$threshold")))
+    }
 
-    // ---- pass 11: correlation bound (reads the fused stats row — no job) ----
-    val corrResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ CorrelationBetween(x, y, lo, hi) =>
-          val cv = stat(s"__corrcv__${x}__${y}")
-          val sx = stat(s"__corrsx__${x}__${y}")
-          val sy = stat(s"__corrsy__${x}__${y}")
-          val v = if (!cv.isNaN && sx > 0 && sy > 0) cv / (sx * sy)
-            else Double.NaN
-          // undefined r (constant column / <2 usable rows) is "no signal"
-          // and passes — constancy is StddevBetween's finding
-          val failed = !v.isNaN && (v < lo || v > hi)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, s"$x,$y", v.toString,
-                  s"corr in [$lo,$hi]", c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, totalRows,
-              if (failed) 1L else 0L, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
-
-    // ---- pass 11b: freshness bound (reads the fused stats row — no job) -----
-    val staleResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ MaxStaleness(columnName, _, maxLag) =>
-          val maxTs = stat(s"__maxts__$columnName")
-          // NaN max = empty table (or all-null column): no newest row, "no
-          // signal", passes — emptiness is MinRows' finding. Data newer
-          // than asOf gives a NEGATIVE lag and passes (future skew is
-          // Monotonic/Compliance's finding). asOf is read in the SESSION
-          // zone — the zone the NTZ→TS cast in the fused agg applied — so
-          // the offset cancels and lag is wall-clock-true in any zone.
-          val zone = java.time.ZoneId.of(
-            spark.sessionState.conf.sessionLocalTimeZone)
-          val lagSec: Option[Double] =
-            if (maxTs.isNaN) None
-            else Some((c.asOfMicrosIn(zone) - maxTs) / 1e6)
-          val failed = lagSec.exists(_ > maxLag)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  lagSec.get.toString,
-                  s"lag<=${maxLag}s as of ${c.asOf}", c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, totalRows,
-              if (failed) 1L else 0L, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
-
-    // ---- pass 11c: language-mix bound (reads the fused stats row — no job) --
-    val langResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ LanguageShare(columnName, lang, lo, hi) =>
-          val n = stat(s"__langn__$columnName")
-          // empty census (no non-null rows): no mix to bound, "no
-          // signal", passes — emptiness is MinRows'/NotNull's finding
-          val share: Option[Double] =
-            if (n.isNaN || n == 0.0) None
-            else Some(stat(s"__lang__${columnName}__$lang") / n)
-          val failed = share.exists(s => s < lo || s > hi)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  share.get.toString,
-                  s"share($lang) in [$lo,$hi]", c.severity)).asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, totalRows,
-              if (failed) 1L else 0L, share.getOrElse(0.0)))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
-
-    // value share: the categorical-mix bound, straight from the fused
-    // counts (LanguageShare's verdict shape)
-    val shareResults: Seq[(Option[DataFrame], DataFrame)] =
-      shareCs.map { case (c, i) =>
-        val n = stat(s"__sharen__${c.column}")
-        // empty census (no non-null rows): no mix to bound — "no signal"
-        val share: Option[Double] =
-          if (n.isNaN || n == 0.0) None
-          else Some(stat(s"__share__$i") / n)
-        val failed = share.exists(s => s < c.lo || s > c.hi)
-        val violationDf: Option[DataFrame] =
-          if (!failed) None
-          else {
-            import scala.jdk.CollectionConverters._
-            Some(spark.createDataFrame(
-              Seq(Row(c.name, "(global)", -1, c.column,
-                share.get.toString,
-                s"share(${c.value}) in [${c.lo},${c.hi}]",
-                c.severity)).asJava,
-              violationSchema))
-          }
-        import spark.implicits._
-        val verdictDf = Seq(("(global)", c.name, !failed, totalRows,
-            if (failed) 1L else 0L, share.getOrElse(0.0)))
-          .toDF("partition_key", "constraint", "pass", "rows",
-            "violations", "violation_rate")
-        (violationDf, verdictDf)
-      }
-
-    // ---- pass 12: entropy bound ---------------------------------------------
+    // ---- pass 10e: entropy bound -------------------------------------------
     // one hash aggregation per constraint (groupBy value → count, map-side
     // combined — only distinct values ride the exchange), then H = ln N −
     // Σ n·ln n / N as a one-row reduction. Meant for category columns.
-    val entropyResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ EntropyBetween(columnName, lo, hi) =>
-          val row = df.where(col(columnName).isNotNull)
-            .groupBy(col(columnName)).agg(count(lit(1)).as("__n"))
-            .agg(sum(col("__n")).as("N"),
-              sum(col("__n").cast("double") * log(col("__n").cast("double")))
-                .as("S"))
-            .collect()(0)
-          val hOpt: Option[Double] =
-            if (row.isNullAt(0) || row.getLong(0) == 0L) None
-            else Some(math.log(row.getLong(0).toDouble) -
-              row.getDouble(1) / row.getLong(0).toDouble)
-          // verdict `rows` = the census size (non-null values), not
-          // totalRows: an entropy-only suite never runs the fused stats
-          // pass, and a hardcoded 0 would read as "nothing scanned"
-          val censusN = if (row.isNullAt(0)) 0L else row.getLong(0)
-          val failed = hOpt.exists(h => h < lo || h > hi)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, columnName,
-                  hOpt.get.toString, s"entropy in [$lo,$hi]", c.severity))
-                  .asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, censusN,
-              if (failed) 1L else 0L, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+    outcomes ++= check.constraints.collect {
+      case c @ EntropyBetween(columnName, lo, hi) =>
+        val row = df.where(col(columnName).isNotNull)
+          .groupBy(col(columnName)).agg(count(lit(1)).as("__n"))
+          .agg(sum(col("__n")).as("N"),
+            sum(col("__n").cast("double") * log(col("__n").cast("double")))
+              .as("S"))
+          .collect()(0)
+        val hOpt: Option[Double] =
+          if (row.isNullAt(0) || row.getLong(0) == 0L) None
+          else Some(math.log(row.getLong(0).toDouble) -
+            row.getDouble(1) / row.getLong(0).toDouble)
+        // verdict `rows` = the census size (non-null values), not
+        // totalRows: an entropy-only suite never runs the fused stats
+        // pass, and a hardcoded 0 would read as "nothing scanned"
+        val censusN = if (row.isNullAt(0)) 0L else row.getLong(0)
+        inRange(c, columnName, hOpt, lo, hi, "entropy", censusN)
+    }
 
-    // ---- pass 12b: uniqueness / distinctness ratio bounds ----------------------
+    // ---- pass 10f: uniqueness / distinctness ratio bounds ------------------
     def keyCensusRatio(columns: Seq[String]): (Long, Long, Long) = {
       val row = ratioCensusFrame(df, columns).collect()(0)
       if (row.isNullAt(0)) (0L, 0L, 0L)
       else (row.getLong(0), row.getLong(1), row.getLong(2))
     }
     def ratioResult(c: Constraint, columns: Seq[String], lo: Double,
-        hi: Double, what: String, tot: Long, num: Long)
-        : (Option[DataFrame], DataFrame) = {
-      val ratioOpt = if (tot == 0L) None else Some(num.toDouble / tot)
-      val failed = ratioOpt.exists(r => r < lo || r > hi)
-      val violationDf: Option[DataFrame] =
-        if (!failed) None
-        else {
-          import scala.jdk.CollectionConverters._
-          Some(spark.createDataFrame(
-            Seq(Row(c.name, "(global)", -1, columns.mkString(","),
-              ratioOpt.get.toString, s"$what in [$lo,$hi]", c.severity))
-              .asJava,
-            violationSchema))
-        }
-      import spark.implicits._
-      val verdictDf = Seq(("(global)", c.name, !failed, tot,
-          if (failed) 1L else 0L, 0.0))
-        .toDF("partition_key", "constraint", "pass", "rows",
-          "violations", "violation_rate")
-      (violationDf, verdictDf)
+        hi: Double, what: String, tot: Long, num: Long): GlobalOutcome =
+      inRange(c, columns.mkString(","),
+        Option.when(tot != 0L)(num.toDouble / tot), lo, hi, what, tot)
+    outcomes ++= check.constraints.collect {
+      case c @ UniquenessBetween(columns, lo, hi) =>
+        val (tot, _, uniq) = keyCensusRatio(columns)
+        ratioResult(c, columns, lo, hi, "uniqueness", tot, uniq)
+      case c @ DistinctnessBetween(columns, lo, hi) =>
+        val (tot, groups, _) = keyCensusRatio(columns)
+        ratioResult(c, columns, lo, hi, "distinctness", tot, groups)
     }
-    val ratioResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ UniquenessBetween(columns, lo, hi) =>
-          val (tot, _, uniq) = keyCensusRatio(columns)
-          ratioResult(c, columns, lo, hi, "uniqueness", tot, uniq)
-        case c @ DistinctnessBetween(columns, lo, hi) =>
-          val (tot, groups, _) = keyCensusRatio(columns)
-          ratioResult(c, columns, lo, hi, "distinctness", tot, groups)
-      }
 
-    // ---- pass 13: mutual-information bound ------------------------------------
+    // ---- pass 10g: mutual-information bound -----------------------------------
     // one hash aggregation per constraint (groupBy (x,y) → count, map-side
     // combined); marginals and the MI sum are window/aggregate passes over
     // the O(distinct pairs) census, never the fact table. ANSI-safe: every
     // divisor is a positive count by construction.
-    val miResults: Seq[(Option[DataFrame], DataFrame)] =
-      check.constraints.collect {
-        case c @ MutualInformationBetween(x, y, lo, hi) =>
-          // "__pn"/"__tot", NOT "__n"/"__N": column resolution is
-          // case-INSENSITIVE by default, so a name differing only in case
-          // silently REPLACES the existing column in withColumn
-          val pairs = df
-            .where(col(x).isNotNull && col(y).isNotNull)
-            .groupBy(col(x).as("__x"), col(y).as("__y"))
-            .agg(count(lit(1)).cast("double").as("__pn"))
-          val row = pairs
-            .withColumn("__nx", sum(col("__pn"))
-              .over(Window.partitionBy(col("__x"))))
-            .withColumn("__ny", sum(col("__pn"))
-              .over(Window.partitionBy(col("__y"))))
-            .withColumn("__tot", sum(col("__pn")).over(Window.partitionBy()))
-            .agg(sum(col("__pn") / col("__tot") *
-              log(col("__pn") * col("__tot") / (col("__nx") * col("__ny"))))
-              .as("mi"),
-              sum(col("__pn")).cast("long").as("__pairs"))
-            .collect()(0)
-          // clamped at 0: MI ≥ 0 by theorem; fp summation noise on an
-          // independent pair can land at −1e−16 and a lo = 0 bound must
-          // not flag it
-          val miOpt: Option[Double] =
-            if (row.isNullAt(0)) None
-            else Some(math.max(0.0, row.getDouble(0)))
-          // verdict `rows` = complete pairs in the census (see entropy)
-          val censusN = if (row.isNullAt(1)) 0L else row.getLong(1)
-          val failed = miOpt.exists(v => v < lo || v > hi)
-          val violationDf: Option[DataFrame] =
-            if (!failed) None
-            else {
-              import scala.jdk.CollectionConverters._
-              Some(spark.createDataFrame(
-                Seq(Row(c.name, "(global)", -1, s"$x,$y",
-                  miOpt.get.toString, s"mi in [$lo,$hi]", c.severity))
-                  .asJava,
-                violationSchema))
-            }
-          import spark.implicits._
-          val verdictDf = Seq(("(global)", c.name, !failed, censusN,
-              if (failed) 1L else 0L, 0.0))
-            .toDF("partition_key", "constraint", "pass", "rows",
-              "violations", "violation_rate")
-          (violationDf, verdictDf)
-      }
+    outcomes ++= check.constraints.collect {
+      case c @ MutualInformationBetween(x, y, lo, hi) =>
+        // "__pn"/"__tot", NOT "__n"/"__N": column resolution is
+        // case-INSENSITIVE by default, so a name differing only in case
+        // silently REPLACES the existing column in withColumn
+        val pairs = df
+          .where(col(x).isNotNull && col(y).isNotNull)
+          .groupBy(col(x).as("__x"), col(y).as("__y"))
+          .agg(count(lit(1)).cast("double").as("__pn"))
+        val row = pairs
+          .withColumn("__nx", sum(col("__pn"))
+            .over(Window.partitionBy(col("__x"))))
+          .withColumn("__ny", sum(col("__pn"))
+            .over(Window.partitionBy(col("__y"))))
+          .withColumn("__tot", sum(col("__pn")).over(Window.partitionBy()))
+          .agg(sum(col("__pn") / col("__tot") *
+            log(col("__pn") * col("__tot") / (col("__nx") * col("__ny"))))
+            .as("mi"),
+            sum(col("__pn")).cast("long").as("__pairs"))
+          .collect()(0)
+        // clamped at 0: MI ≥ 0 by theorem; fp summation noise on an
+        // independent pair can land at −1e−16 and a lo = 0 bound must
+        // not flag it
+        val miOpt: Option[Double] =
+          if (row.isNullAt(0)) None
+          else Some(math.max(0.0, row.getDouble(0)))
+        // verdict `rows` = complete pairs in the census (see entropy)
+        val censusN = if (row.isNullAt(1)) 0L else row.getLong(1)
+        inRange(c, s"$x,$y", miOpt, lo, hi, "mi", censusN)
+    }
 
     // Violations feed BOTH the violation sink and the per-conversation
     // verdict counts — persist so the (typically small) violation set is
     // computed once instead of re-deriving every upstream pass per action.
+    // The outcomes' driver-built frame joins when it explains something,
+    // and always when a schema is declared (conforming or not).
+    val outcomeViolationDfs =
+      if (outcomes.exists(_.explained.nonEmpty) || schemaOutcomes.nonEmpty)
+        Seq(outcomeViolations(spark, outcomes.toSeq))
+      else Nil
     val allViolations = (Seq(rowViolations) ++ windowViolations ++
       uniqueViolations ++ contiguousViolations ++ refViolations ++
       sequenceViolations ++ fdViolations ++ asofViolations ++
-      schemaViolationDfs ++ distDriftResults.flatMap(_._1) ++
-      dupRateResults.flatMap(_._1) ++ nearDupResults.flatMap(_._1) ++
-      corrResults.flatMap(_._1) ++ staleResults.flatMap(_._1) ++
-      langResults.flatMap(_._1) ++
-      shareResults.flatMap(_._1) ++
-      coverageResults.flatMap(_._1) ++
-      entropyResults.flatMap(_._1) ++
-      ratioResults.flatMap(_._1) ++
-      miResults.flatMap(_._1) ++
-      driftResults.map(_._1)).reduce(_ unionByName _)
+      outcomeViolationDfs ++ driftResults.map(_._1)).reduce(_ unionByName _)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ---- verdicts -----------------------------------------------------------
     import spark.implicits._
-    val perConvConstraints = rowChecks.map(rc => (rc.c.name, rc.c match {
-      case NotNull(_, maxRate) => maxRate
-      case Compliance(_, _, maxRate) => maxRate
-      case ParsableAs(_, _, maxRate) => maxRate
-      case NoPii(_, _, maxRate) => maxRate
-      case MinTextQuality(_, _, maxRate) => maxRate
-      case VectorShape(_, _, _, _, maxRate) => maxRate
-      case LengthBounds(_, _, _, maxRate) => maxRate
-      case InSet(_, _, maxRate) => maxRate
-      case MatchesRegex(_, _, maxRate) => maxRate
-      case ValueBounds(_, _, _, maxRate) => maxRate
-      case _ => 0.0
-    })) ++
-      check.constraints.collect { case c: RollingZDrift => (c.name, 0.0) } ++
-      // a UniqueKey whose tuple misses the conversation key verdicts
-      // GLOBALLY (its violation rows carry conv_id "(global)") — a
-      // per-conversation row would report 0/pass for every conversation
-      // regardless of duplicates, like the non-key-determinant FD case
+    val perConvConstraints = rowChecks.map(rc => (rc.name, rc.maxRate)) ++
       check.constraints.collect {
-        case c: UniqueKey if c.columns.contains(check.keyCol) =>
-          (c.name, 0.0)
-      } ++
-      // inlined RIs already ride rowChecks under the same constraint name
-      check.constraints.collect {
+        case c @ (_: RollingZDrift | _: ContiguousIndex | _: TurnCountBetween |
+            _: MaxSessionGap | _: AllowedTransitions | _: Monotonic |
+            _: NoConsecutiveRepeats | _: AsOfIntegrity) => c.name
+        // a UniqueKey or FD whose tuple misses the conversation key
+        // verdicts GLOBALLY (its violation rows carry conv_id "(global)") —
+        // a per-conversation row would report 0/pass for every
+        // conversation regardless of duplicates
+        case c: UniqueKey if c.columns.contains(check.keyCol) => c.name
+        case c: FunctionalDependency
+            if c.determinant.contains(check.keyCol) => c.name
+        // inlined RIs already ride rowChecks under the same constraint name
         case c: ReferentialIntegrity
             if c.keyCensus || inlineDimValues((c.dim, c.dimColumn)) == null =>
-          (c.name, 0.0)
-      } ++
-      check.constraints.collect { case c: ContiguousIndex => (c.name, 0.0) } ++
-      check.constraints.collect { case c: TurnCountBetween => (c.name, 0.0) } ++
-      check.constraints.collect { case c: MaxSessionGap => (c.name, 0.0) } ++
-      check.constraints.collect { case c: AllowedTransitions => (c.name, 0.0) } ++
-      check.constraints.collect { case c: Monotonic => (c.name, 0.0) } ++
-      check.constraints.collect { case c: NoConsecutiveRepeats => (c.name, 0.0) } ++
-      // an FD whose determinant carries the conversation key attributes its
-      // groups to conversations; otherwise it verdicts globally (below)
-      check.constraints.collect {
-        case c: FunctionalDependency if c.determinant.contains(check.keyCol) =>
-          (c.name, 0.0)
-      } ++
-      check.constraints.collect { case c: AsOfIntegrity => (c.name, 0.0) }
+          c.name
+      }.map((_, 0.0))
 
     // guarded, not left to PropagateEmptyRelation: a suite with no
     // per-conversation constraints (e.g. schema-only) must not even PLAN a
@@ -1529,94 +1363,6 @@ object Validator {
           "violation_rate")
     } else conversationVerdicts(df, check.keyCol, perConvConstraints,
       allViolations)
-
-    // global verdicts for aggregate constraints, straight from the stats row
-    val globalVerdicts: Seq[(String, Boolean, Long, Long, Double)] =
-      check.constraints.collect {
-        case c @ MinRows(n) =>
-          (c.name, totalRows >= n, totalRows, if (totalRows >= n) 0L else 1L, 0.0)
-        case c @ MeanBetween(columnName, lo, hi) =>
-          val m = stat(s"__mean__$columnName")
-          (c.name, m >= lo && m <= hi, totalRows, if (m >= lo && m <= hi) 0L else 1L, 0.0)
-        case c @ StddevBetween(columnName, lo, hi) =>
-          val s0 = stat(s"__stds__$columnName")
-          (c.name, s0 >= lo && s0 <= hi, totalRows, if (s0 >= lo && s0 <= hi) 0L else 1L, 0.0)
-        case c @ QuantileBetween(columnName, q, lo, hi, _) =>
-          val v = stat(s"__q${q}__$columnName")
-          (c.name, v >= lo && v <= hi, totalRows, if (v >= lo && v <= hi) 0L else 1L, 0.0)
-        case c @ DistinctCountBetween(columnName, lo, hi) =>
-          val v = stat(s"__hll__$columnName").toLong
-          (c.name, v >= lo && v <= hi, totalRows, if (v >= lo && v <= hi) 0L else 1L, 0.0)
-        case c @ NotNull(columnName, maxRate) =>
-          val rate = stat(s"__nulls__$columnName") / math.max(1.0, totalRows.toDouble)
-          (s"${c.name}[global]", rate <= maxRate, totalRows,
-            stat(s"__nulls__$columnName").toLong, rate)
-      } ++
-      // compliance global rate bound, straight from the fused fail count
-      // (the per-conversation verdicts ride rowChecks under c.name; the
-      // [global] suffix keeps the two verdict rows distinct, like NotNull)
-      compCs.map { case (c, i) =>
-        val fails = stat(s"__comp__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // parsable_as global rate bound, like compliance's
-      parsCs.map { case (c, i) =>
-        val fails = stat(s"__pars__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // no_pii global rate bound, like compliance's
-      piiCs.map { case (c, i) =>
-        val fails = stat(s"__pii__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // min_quality global rate bound, like compliance's
-      qualCs.map { case (c, i) =>
-        val fails = stat(s"__qual__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // vector_shape global rate bound, like compliance's
-      vecCs.map { case (c, i) =>
-        val fails = stat(s"__vec__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // length_bounds global rate bound, like compliance's
-      lenCs.map { case (c, i) =>
-        val fails = stat(s"__len__$i")
-        val rate = fails / math.max(1.0, totalRows.toDouble)
-        (s"${c.name}[global]", rate <= c.maxFailRate, totalRows,
-          fails.toLong, rate)
-      } ++
-      // graded in_set / matches / bounds rate verdicts, like compliance's
-      (insetCs.map { case (c, i) =>
-          (c.name, c.maxFailRate, s"__inset__$i") } ++
-        regexCs.map { case (c, i) =>
-          (c.name, c.maxFailRate, s"__regex__$i") } ++
-        vbCs.map { case (c, i) => (c.name, c.maxFailRate, s"__vb__$i") })
-        .map { case (name, maxRate, alias) =>
-          val fails = stat(alias)
-          val rate = fails / math.max(1.0, totalRows.toDouble)
-          (s"$name[global]", rate <= maxRate, totalRows, fails.toLong, rate)
-        } ++
-      // schema conformance: pass iff zero mismatches (already computed,
-      // driver-side, in pass 0)
-      schemaResults.map { case (c, ms) =>
-        (c.name, ms.isEmpty, totalRows, ms.size.toLong, 0.0)
-      }
-    val globalVerdictDf = globalVerdicts
-      .toDF("constraint", "pass", "rows", "violations", "violation_rate")
-      .withColumn("partition_key", lit("(global)"))
-      .select("partition_key", "constraint", "pass", "rows", "violations",
-        "violation_rate")
 
     // FDs and UniqueKeys whose tuple does NOT carry the conversation key
     // verdict globally (their violation rows carry conv_id "(global)",
@@ -1640,18 +1386,9 @@ object Validator {
             .as("violation_rate"))
     }
 
-    val allVerdicts = (Seq(perConvVerdicts, globalVerdictDf) ++
-      keyShareVerdicts ++ fdGlobalVerdicts ++ distDriftResults.map(_._2) ++
-      dupRateResults.map(_._2) ++ nearDupResults.map(_._2) ++
-      corrResults.map(_._2) ++ staleResults.map(_._2) ++
-      langResults.map(_._2) ++
-      shareResults.map(_._2) ++
-      coverageResults.map(_._2) ++
-      entropyResults.map(_._2) ++
-      ratioResults.map(_._2) ++
-      miResults.map(_._2) ++
-      driftResults.map(_._2))
-      .reduce(_ unionByName _)
+    val allVerdicts = (Seq(perConvVerdicts,
+      outcomeVerdicts(spark, outcomes.toSeq)) ++ fdGlobalVerdicts ++
+      driftResults.map(_._2)).reduce(_ unionByName _)
 
     Result(allViolations, allVerdicts,
       cached = (allViolations +: driftResults.flatMap(_._3)) ++

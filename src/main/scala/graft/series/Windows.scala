@@ -104,24 +104,6 @@ object Windows {
       .withColumn("__chunk", floor(ord / chunk) + col("__copy"))
   }
 
-  /** W1/W2 at mega-key scale: trailing rolling mean/std/count within
-    * (key, chunk) under [[chunkWithHalo]], so the per-task row count is
-    * bounded. Identical to the plain window on dense input (SkewSpec
-    * asserts equality).
-    */
-  def boundedRollingStats(df: DataFrame, valueCol: String, window: Int,
-      keyCol: String, ordCol: String, chunk: Int = DefaultChunk): DataFrame = {
-    val w = Window.partitionBy(col(keyCol), col("__chunk")).orderBy(col(ordCol))
-      .rowsBetween(-(window - 1), 0)
-    val v = col(valueCol)
-    chunkWithHalo(df, ordCol, window, chunk)
-      .withColumn(s"${valueCol}_n", count(v).over(w))
-      .withColumn(s"${valueCol}_rolling_mean", avg(v).over(w))
-      .withColumn(s"${valueCol}_rolling_std", stddev_samp(v).over(w))
-      .where(col("__copy") === 0)
-      .drop("__copy", "__chunk")
-  }
-
   /** W3: centered rolling mean (smoothing; reference src/preprocessing.py:230-234). */
   def centeredMean(df: DataFrame, valueCol: String, window: Int,
       partitionCols: Seq[String], orderCols: Seq[String]): DataFrame = {

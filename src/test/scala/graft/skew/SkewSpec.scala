@@ -50,7 +50,7 @@ class SkewSpec extends GraftSuite {
 
   test("chunked rolling window bounds per-task rows for a mega-conversation " +
       "with verdicts unchanged") {
-    import graft.series.Windows
+    import graft.compile.RollingZReference
     // one mega conversation (megaFactor 200 ≫ the default 50) + normals;
     // dupRate huge → dense unique turn_idx so chunked == plain exactly
     val t = TranscriptGen.generate(spark, nConvs = 101, baseTurns = 40,
@@ -58,8 +58,8 @@ class SkewSpec extends GraftSuite {
       .withColumn("v", pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(1000))
         .cast("double"))
     val chunk = 512 // mega conv has 8000 turns → must spread over ≥15 chunks
-    val bounded = Windows.boundedRollingStats(t, "v", 24, "conv_id", "turn_idx",
-      chunk = chunk)
+    val bounded = RollingZReference.boundedRollingStats(t, "v", 24, "conv_id",
+      "turn_idx", chunk = chunk)
     // per-(key, chunk) group never exceeds chunk + window - 1 rows
     val grp = t.groupBy(col("conv_id"), floor(col("turn_idx").cast("long") / chunk))
       .count().agg(max("count")).collect()(0).getLong(0)
