@@ -87,6 +87,8 @@ class GoldenE2eSpec extends GraftSuite {
 
   test("flagship suite verdicts + violations match the committed goldens") {
     val r = Validator.validate(fixture, suite, dims)
+    assertSchemas(r, Seq("conv_id", "turn_idx", "observed"),
+      keyedVerdictColumns)
     check("e2e_violations.csv", render(r.violations))
     check("e2e_verdicts.csv", render(r.verdicts))
     r.unpersistAll()
@@ -116,13 +118,6 @@ class GoldenE2eSpec extends GraftSuite {
       r.violations.schema.treeString)
     assert(r.verdicts.schema == schema(verdictColumns, verdictsNullable),
       r.verdicts.schema.treeString)
-  }
-
-  test("flagship suite schemas, nullability included") {
-    val r = Validator.validate(fixture, suite, dims)
-    assertSchemas(r, Seq("conv_id", "turn_idx", "observed"),
-      keyedVerdictColumns)
-    r.unpersistAll()
   }
 
   // one hand-built table (3 conversations of 18/10/8 turns) whose columns
