@@ -23,7 +23,8 @@ import graft.series.{Decomposition, Drift, DriftKernel, RollingKernel}
   *  pass 1b  one more fused aggregation iff RobustZ needs MAD (median of
   *           |x - median|) — the only stat that depends on another stat;
   *  pass 2   one projection with every row-level flag, exploded into
-  *           violation rows (single scan); rolling-z flags and the fused
+  *           violation rows (single scan) after a prefilter on the OR of
+  *           the flags; rolling-z flags and the fused
   *           (key, order) duplicate-key census in ONE sorted kernel pass
   *           per (conversation, chunk) over the pruned (key, order, value);
   *  pass 3   uniqueness group-bys (one per key tuple), then the index
@@ -31,9 +32,11 @@ import graft.series.{Decomposition, Drift, DriftKernel, RollingKernel}
   *  pass 4   anti-joins, one per referenced big dimension (broadcast by
   *           default; shuffled sort-merge when `broadcastDim = false`; the
   *           key-census tier with `keyCensus = true`);
-  *  pass 5   turn-rate drift: one bucket count, then ONE grouped kernel per
-  *           conversation (STL, residual fences, PSI, KS, verdict) into a
-  *           single persisted frame that violations and verdicts both read;
+  *  pass 5   turn-rate drift: ONE grouped kernel per conversation over
+  *           its turns, one exchange on the key (bucket counts, STL,
+  *           residual fences, PSI, KS, verdict), into a single persisted
+  *           frame that violations and verdicts both read; `classical`
+  *           counts and decomposes its buckets with window ops first;
   *  pass 6   key-share skew guard (Misra–Gries sketch + exact recount);
   *  pass 7   the sequence checks (gap, transitions, order, repeats) over
   *           ONE shared exchange on the key;
@@ -227,8 +230,16 @@ object Validator {
 
   /** One projection emitting every configured check's violation rows:
     * each input row fans out to an array of per-check structs, filtered
-    * to the violated ones and exploded — shuffle-free, codegen-friendly,
-    * and legal on a STREAMING DataFrame (no state, no watermark).
+    * to the violated ones and exploded — shuffle-free and legal on a
+    * STREAMING DataFrame (no state, no watermark). `ArrayFilter` has no
+    * code generation (it is `CodegenFallback`) and interprets every struct
+    * of every row, so a codegen'd prefilter, the OR of the checks'
+    * `violated` flags, first keeps only the rows that violate something;
+    * under three-valued logic a row whose flags are all false or null
+    * never reaches the explode, as a null flag never emits there either.
+    * The OR reads the flags off the array, so each flag expression is
+    * analyzed once; the optimizer substitutes them and pushes the filter
+    * below the projection, onto the scan.
     * `checks` tuples are (name, column, observed, bound, severity,
     * violated).
     */
@@ -249,6 +260,9 @@ object Validator {
     base.select(col(keyCol).cast("string").as("conv_id"),
         col(ordCol).cast("int").as("turn_idx"),
         array(structs: _*).as("__checks"))
+      .where(checks.indices
+        .map(i => col("__checks").getItem(i).getField("violated"))
+        .reduce(_ || _))
       .select(col("conv_id"), col("turn_idx"),
         explode(filter(col("__checks"), x => x.getField("violated"))).as("v"))
       .select(col("v.constraint"), col("conv_id"), col("turn_idx"),
@@ -1503,30 +1517,37 @@ object Validator {
         col("pass"), col("rows"), col("violations"), col("violation_rate"))
   }
 
-  /** Turn-rate drift: bucket per (conv, window(ts)), then ONE grouped
-    * pass ([[DriftKernel]]) scores each conversation's sorted series —
-    * decomposition, residual fences, PSI, KS and the verdict — into one
-    * persisted row per conversation; violations explode its anomaly array,
-    * verdicts project it. `classical` decomposes with window ops first and
-    * hands its residuals to the same kernel.
+  /** Turn-rate drift: ONE grouped pass ([[DriftKernel]]) per conversation
+    * scores its sorted series — decomposition, residual fences, PSI, KS
+    * and the verdict — into one persisted row per conversation;
+    * violations explode its anomaly array, verdicts project it. `stl`
+    * reads turns, one (key, bucket start) row each, and counts the
+    * buckets inside the kernel, so the pass shuffles once; a turn with a
+    * null ts has no bucket and is dropped, as `window()` grouping drops
+    * it. `classical` counts buckets with an aggregate, decomposes them with
+    * window ops and hands its residuals to the same kernel.
     */
   private[graft] def turnRateDrift(df: DataFrame, check: Check,
       c: TurnRateDrift): (DataFrame, DataFrame, Seq[DataFrame]) = {
     val key = check.keyCol
-    val series = df
-      .groupBy(col(key), window(col(check.tsCol), c.bucket).as("w"))
-      .agg(count(lit(1)).as("n_turns"))
-      .select(col(key), col("w.start").as("bucket_ts"), col("n_turns"))
+    val bucket = window(col(check.tsCol), c.bucket)
     val scored = (c.method match {
       case "stl" =>
-        DriftKernel.score(series, key, "bucket_ts", "n_turns", None, c)
+        // window() drops a null ts row, as it does under a groupBy
+        DriftKernel.scoreTurns(
+          df.select(col(key), bucket.getField("start").as("__bucket")),
+          key, "__bucket", c)
       case "classical" =>
+        val series = df.groupBy(col(key), bucket.as("w"))
+          .agg(count(lit(1)).as("n_turns"))
+          .select(col(key), col("w.start").as("bucket_ts"), col("n_turns"))
         val decomposed = Decomposition.additive(
           series.withColumn("__y", col("n_turns").cast("double")),
           "__y", c.period, Seq(key), Seq("bucket_ts"))
-        DriftKernel.score(decomposed, key, "idx", "n_turns", Some("resid"), c)
+        DriftKernel.scoreResiduals(decomposed, key, "idx", "n_turns", "resid", c)
       case other => throw new IllegalArgumentException(s"unknown method $other")
-    }).toDF().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }).withColumn("key", col("key").cast("string"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val violations = scored
       .select(col("key"), explode(col("anomalies")).as("a"))

@@ -1,18 +1,23 @@
 package graft.series
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.collection.mutable.ArrayBuilder
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.dsl.TurnRateDrift
 
 /** Turn-rate drift scored one conversation at a time: a single
-  * `groupByKey(key).flatMapSortedGroups(order)` over the bucketed series
-  * runs decomposition (STL, unless residuals are supplied), residual
-  * anomalies, PSI and exact KS between the series' halves, and the
-  * verdict, all in the JVM on the sorted buckets — one shuffle by key
-  * instead of a chain of key-partitioned windows, aggregates and joins
-  * (the shape [[SeriesKernels]] uses for STL alone). A series is
-  * buckets-per-conversation, not turns, so a mega-conversation stays small.
+  * `groupBy(key).as[Row, Row].flatMapSortedGroups(order)` runs
+  * decomposition (STL, unless residuals are supplied), residual anomalies,
+  * PSI and exact KS between the series' halves, and the verdict, all in
+  * the JVM on the sorted group — one shuffle by key instead of a chain of
+  * key-partitioned windows, aggregates and joins. Grouping on the real key
+  * column (the [[RollingKernel]] idiom) lets an input already
+  * hash-partitioned on the key satisfy the grouping without another
+  * exchange. A series is buckets-per-conversation, not turns, so a
+  * mega-conversation keeps O(buckets) state.
   *
   * Each statistic repeats the arithmetic of the Spark SQL it replaces:
   * residual fences use Spark's `percentile` ([[Percentile]]) with a
@@ -21,48 +26,90 @@ import graft.dsl.TurnRateDrift
   * frequency-weighted percentile edges, bins by `v > edge`, clamps at
   * 1e-4 and uses `StrictMath.log`; KS is the exact CDF gap over the
   * distinct values.
+  *
+  * Both entry points emit one row per key: the key as its own type,
+  * `rows` (buckets), `violations`, `pass`, and the `anomalies` array of
+  * (bucket idx, residual) that feeds the violation rows.
   */
 object DriftKernel {
 
   private val Bins = 10
   private val Eps = 1e-4
 
-  /** One bucket: turn count `n` and, when the decomposition already ran,
-    * its residual (null where the decomposition leaves none).
-    */
-  final case class Bucket(key: String, n: Long, resid: Option[Double])
-  final case class Anomaly(idx: Int, resid: Double)
-  /** One row per conversation: `anomalies` feed the violation rows,
-    * `violations` is the count the verdict reports.
-    */
-  final case class Scored(key: String, rows: Long, violations: Long,
-      pass: Boolean, anomalies: Seq[Anomaly])
+  private final case class Anomaly(idx: Int, resid: Double)
 
-  /** Score every series of `series` (one row per bucket), ordered by
-    * `orderCol` within `keyCol`. With `residCol = None` the kernel
-    * STL-decomposes each series of at least 2·period buckets (shorter
-    * ones have no residuals); otherwise it scores the given residuals.
+  /** STL drift straight from turns: `turns` holds one row per turn with a
+    * non-null `bucketCol` (the bucket start). Each group streams its turns
+    * in bucket order and counts runs of equal bucket starts into the
+    * series — the per-(key, bucket) count without an aggregate and exchange
+    * of its own — then STL-decomposes a series of at least 2·period
+    * buckets (a shorter one has no residuals).
     */
-  def score(series: DataFrame, keyCol: String, orderCol: String,
-      valueCol: String, residCol: Option[String],
-      c: TurnRateDrift): Dataset[Scored] = {
+  def scoreTurns(turns: DataFrame, keyCol: String, bucketCol: String,
+      c: TurnRateDrift): DataFrame = {
+    val bucketAt = turns.schema.fieldIndex(bucketCol)
+    grouped(turns, keyCol, bucketCol, c) { rows =>
+      val counts = ArrayBuilder.make[Long]
+      var bucket: Any = null
+      var n = 0L
+      rows.foreach { r =>
+        val b = r.get(bucketAt)
+        if (n > 0 && b != bucket) { counts += n; n = 0L }
+        bucket = b
+        n += 1
+      }
+      if (n > 0) counts += n
+      val y = counts.result()
+      (y, stlResid(y, c), false)
+    }
+  }
+
+  /** Drift over a decomposed series: one row per bucket, `orderCol`
+    * ordering the buckets of a key, `valueCol` the bucket's turn count and
+    * `residCol` its residual (null where the decomposition leaves none).
+    */
+  def scoreResiduals(series: DataFrame, keyCol: String, orderCol: String,
+      valueCol: String, residCol: String, c: TurnRateDrift): DataFrame = {
+    val in = series.select(col(keyCol), col(orderCol),
+      col(valueCol).cast("long"), col(residCol).cast("double"))
+    grouped(in, keyCol, orderCol, c) { rows =>
+      val buf = rows.toArray
+      val y = buf.map(_.getLong(2))
+      val resid = buf.map(r => if (r.isNullAt(3)) None else Some(r.getDouble(3)))
+      (y, resid, true)
+    }
+  }
+
+  /** Groups `in` on `keyCol`, sorts each group by `orderCol`, and scores
+    * the (series, residuals, phaseMajor) that `series` reads off the group.
+    */
+  private def grouped(in: DataFrame, keyCol: String, orderCol: String,
+      c: TurnRateDrift)(
+      series: Iterator[Row] => (Array[Long], Array[Option[Double]], Boolean))
+      : DataFrame = {
     require(Set("iqr", "zscore", "threshold")(c.residMethod),
       s"unknown method: ${c.residMethod}")
-    val spark = series.sparkSession
-    import spark.implicits._
-    series.select(col(keyCol).cast("string").as("key"),
-        col(valueCol).cast("long").as("n"),
-        residCol.fold(lit(null))(col).cast("double").as("resid"),
-        col(orderCol).as("__order"))
-      .as[Bucket]
-      .groupByKey(_.key)
-      .flatMapSortedGroups(col("__order")) { (key, rows) =>
-        val buf = rows.toArray
-        val y = buf.map(_.n)
-        val resid = if (residCol.isDefined) buf.map(_.resid) else stlResid(y, c)
-        Iterator.single(scoreSeries(key, y, resid, c,
-          phaseMajor = residCol.isDefined))
-      }
+    val keyField = in.schema(keyCol)
+    val anomalyType = StructType(Seq(
+      StructField("idx", IntegerType, nullable = false),
+      StructField("resid", DoubleType, nullable = false)))
+    val outType = StructType(Seq(
+      keyField.copy(name = "key", nullable = true),
+      StructField("rows", LongType, nullable = false),
+      StructField("violations", LongType, nullable = false),
+      StructField("pass", BooleanType, nullable = false),
+      StructField("anomalies", ArrayType(anomalyType, containsNull = true))))
+    in.groupBy(col(keyCol))
+      .as[Row, Row](Encoders.row(StructType(Seq(keyField))),
+        Encoders.row(in.schema))
+      .flatMapSortedGroups(col(orderCol)) { (k, rows) =>
+        val (y, resid, phaseMajor) = series(rows)
+        val (violations, pass, anomalies) =
+          scoreSeries(k.isNullAt(0), y, resid, c, phaseMajor)
+        Iterator.single(Row(k.get(0), y.length.toLong, violations, pass,
+          anomalies.map(a => Row(a.idx, a.resid))))
+      }(Encoders.row(outType))
+      .toDF()
   }
 
   private def stlResid(y: Array[Long],
@@ -82,23 +129,23 @@ object DriftKernel {
     * (idx mod period, idx) order. On near-constant residuals the spread
     * is rounding noise, and summation order then decides the z-scores.
     */
-  private def scoreSeries(key: String, y: Array[Long],
+  private def scoreSeries(nullKey: Boolean, y: Array[Long],
       resid: Array[Option[Double]], c: TurnRateDrift,
-      phaseMajor: Boolean): Scored = {
+      phaseMajor: Boolean): (Long, Boolean, Seq[Anomaly]) = {
     val order =
       if (phaseMajor) resid.indices.sortBy(i => (i % c.period, i))
       else resid.indices
-    if (key == null) {
+    if (nullKey) {
       val emitted =
         if (c.residMethod == "threshold") residAnomalies(resid, order, c)
         else Nil
-      return Scored(key, y.length, 0L, pass = true, emitted)
+      return (0L, true, emitted)
     }
     val anomalies = residAnomalies(resid, order, c)
     val (psi, ks) = psiKs(y)
     val pass = anomalies.isEmpty && psi.forall(_ <= c.psiThreshold) &&
       ks.forall(_ <= c.ksThreshold)
-    Scored(key, y.length, anomalies.size.toLong, pass, anomalies)
+    (anomalies.size.toLong, pass, anomalies)
   }
 
   private def residAnomalies(resid: Array[Option[Double]], order: Seq[Int],

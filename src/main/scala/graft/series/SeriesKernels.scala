@@ -28,7 +28,7 @@ object SeriesKernels {
       col(idxCol).cast("int").as("idx"),
       col(valueCol).cast("double").as("y"))
       .as[(String, Int, Double)]
-    val out = in.groupByKey(_._1)
+    val out = in.groupBy(col("key")).as[String, (String, Int, Double)]
       .flatMapSortedGroups(col("idx")) { (key, rows) =>
         val buf = rows.toArray
         val y = buf.map(_._3)
@@ -59,21 +59,24 @@ object SeriesKernels {
     val spark = decomposed.sparkSession
     import spark.implicits._
     val in = decomposed.select(
-      col(keyCol).cast("string"), col(idxCol).cast("int"),
+      col(keyCol).cast("string").as("key"), col(idxCol).cast("int"),
       col("trend"), col("seasonal"))
       .as[(String, Int, Option[Double], Option[Double])]
-    in.groupByKey(_._1).flatMapSortedGroups(col(idxCol)) { (key, rows) =>
-      val buf = rows.toArray
-      val trendVals = buf.flatMap(_._3)
-      val seasVals = buf.flatMap(_._4)
-      if (trendVals.length >= 2 && seasVals.length >= period) {
-        val slope = trendVals(trendVals.length - 1) - trendVals(trendVals.length - 2)
-        val lastTrend = trendVals.last
-        val lastSeason = seasVals.takeRight(period)
-        (1 to periods).iterator.map { h =>
-          (key, h, lastTrend + slope * h + lastSeason((h - 1) % period))
-        }
-      } else Iterator.empty
-    }.toDF(keyCol, "step", "forecast")
+    in.groupBy(col("key"))
+      .as[String, (String, Int, Option[Double], Option[Double])]
+      .flatMapSortedGroups(col(idxCol)) { (key, rows) =>
+        val buf = rows.toArray
+        val trendVals = buf.flatMap(_._3)
+        val seasVals = buf.flatMap(_._4)
+        if (trendVals.length >= 2 && seasVals.length >= period) {
+          val slope = trendVals(trendVals.length - 1) - trendVals(trendVals.length - 2)
+          val lastTrend = trendVals.last
+          val lastSeason = seasVals.takeRight(period)
+          (1 to periods).iterator.map { h =>
+            (key, h, lastTrend + slope * h + lastSeason((h - 1) % period))
+          }
+        } else Iterator.empty
+      }
+      .toDF(keyCol, "step", "forecast")
   }
 }

@@ -186,7 +186,7 @@ object Stationarity {
       col(idxCol).cast("int").as("idx"),
       col(valueCol).cast("double").as("y"))
       .as[(String, Int, Double)]
-    in.groupByKey(_._1)
+    in.groupBy(col("key")).as[String, (String, Int, Double)]
       .flatMapSortedGroups(col("idx")) { (key, rows) =>
         val y = rows.map(_._3).toArray
         if (y.length >= minLen) {

@@ -222,42 +222,104 @@ class PlanSpec extends GraftSuite {
     spark.sharedState.cacheManager.clearCache()
   }
 
-  test("turn-rate drift: one grouped kernel — at most 2 exchanges, no sort-merge join, one cached frame") {
+  /** Runs turn-rate drift with `method` over `t` (60 conversations; the
+    * caller turns AQE off) and gates the plan of the ONE persisted scored
+    * frame that both outputs read: at most `maxExchanges` exchanges, no
+    * typed-key AppendColumns, no sort-merge join.
+    */
+  private def driftPlanGate(t: DataFrame, method: String,
+      maxExchanges: Int): Unit = {
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val c = graft.dsl.TurnRateDrift(bucket = "1 minute", period = 7,
+      method = method)
+    val (violations, verdicts, cached) =
+      compile.Validator.turnRateDrift(t, graft.dsl.Check("drift", Seq(c)), c)
+    assert(cached.size == 1, s"$method drift persisted ${cached.size} frames")
+    assert(verdicts.count() == 60 && violations.count() >= 0)
+    // both outputs read the persisted scored frame — walk into its plan
+    for (out <- Seq(violations, verdicts)) {
+      val top = out.queryExecution.executedPlan
+      val scans = top.collect { case s: InMemoryTableScanExec => s }
+      assert(scans.size == 1, s"expected one cached-frame scan:\n$top")
+      val scored = scans.head.relation.cachedPlan
+      val exchanges = scored.collect { case e: ShuffleExchangeExec => e }
+      assert(exchanges.size <= maxExchanges,
+        s"${exchanges.size} exchanges in the $method drift plan:\n$scored")
+      assert(!scored.exists(_.nodeName.startsWith("AppendColumns")),
+        s"typed-key AppendColumns in the $method drift plan:\n$scored")
+      for (p <- Seq(top, scored))
+        assert(p.collect { case j: SortMergeJoinExec => j }.isEmpty,
+          s"sort-merge join in the $method drift plan:\n$p")
+    }
+    cached.foreach(_.unpersist())
+  }
+
+  test("turn-rate drift: one grouped kernel — at most 2 exchanges, no sort-merge join, one cached frame") {
     val cacheManager = spark.sharedState.cacheManager
     cacheManager.clearCache()
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val t = sources.TranscriptGen.generate(spark, nConvs = 60, baseTurns = 30)
-      val c = graft.dsl.TurnRateDrift(bucket = "1 minute", period = 7)
-      val check = graft.dsl.Check("drift", Seq(c))
-      val (violations, verdicts, cached) =
-        compile.Validator.turnRateDrift(t, check, c)
-      assert(cached.size == 1, s"drift persisted ${cached.size} frames")
-      assert(verdicts.count() == 60 && violations.count() >= 0)
-      // both outputs read the persisted scored frame — walk into its plan
-      for (out <- Seq(violations, verdicts)) {
-        val top = out.queryExecution.executedPlan
-        val scans = top.collect { case s: InMemoryTableScanExec => s }
-        assert(scans.size == 1, s"expected one cached-frame scan:\n$top")
-        val scored = scans.head.relation.cachedPlan
-        val exchanges = scored.collect { case e: ShuffleExchangeExec => e }
-        assert(exchanges.size <= 2,
-          s"${exchanges.size} exchanges in the drift plan:\n$scored")
-        for (p <- Seq(top, scored))
-          assert(p.collect { case j: SortMergeJoinExec => j }.isEmpty,
-            s"sort-merge join in the drift plan:\n$p")
-      }
-      cached.foreach(_.unpersist())
+      // classical keeps the bucket aggregate its window decomposition reads
+      driftPlanGate(t, "classical", maxExchanges = 2)
       // through validate(): the violation union plus the ONE scored frame,
       // and unpersistAll() releases everything validate() cached
-      val r = compile.Validator.validate(t, check)
+      val c = graft.dsl.TurnRateDrift(bucket = "1 minute", period = 7)
+      val r = compile.Validator.validate(t, graft.dsl.Check("drift", Seq(c)))
       assert(r.verdicts.count() > 0 && r.violations.count() >= 0)
       assert(r.cached.size == 2, s"Result.cached holds ${r.cached.size} frames")
       r.unpersistAll()
       assert(cacheManager.isEmpty, "unpersistAll() left cached plans behind")
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("turn-rate drift, stl: the kernel counts its own buckets — ONE exchange, no AppendColumns") {
+    spark.sharedState.cacheManager.clearCache()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val t = sources.TranscriptGen.generate(spark, nConvs = 60, baseTurns = 30)
+      driftPlanGate(t, "stl", maxExchanges = 1)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("row flags: the explode over the scan sits above a Filter holding the OR of the checks") {
+    import org.apache.spark.sql.catalyst.expressions.Or
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import graft.dsl.{Check, InSet, MatchesRegex, NotNull, ValueBounds}
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("graft_rowflags").toString
+      sources.TranscriptGen.generate(spark, nConvs = 60, baseTurns = 30)
+        .write.mode("overwrite").parquet(dir)
+      val r = compile.Validator.validate(spark.read.parquet(dir), Check("rows", Seq(
+        NotNull("text"), MatchesRegex("conv_id", "^conv_[0-9]{8}$"),
+        ValueBounds("turn_idx", Some(0), Some(100)),
+        InSet("role", Seq("user", "assistant", "system", "tool")))))
+      try {
+        assert(r.violations.count() > 0)
+        // the violation union is persisted: walk into the cached plans too
+        def nodes(p: SparkPlan): Seq[SparkPlan] = p.flatMap {
+          case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+          case n => Seq(n)
+        }
+        val all = nodes(r.violations.queryExecution.executedPlan)
+        val generates = all.collect { case g: GenerateExec => g }
+        assert(generates.size == 1, s"expected one explode:\n${all.head}")
+        // the interpreted ArrayFilter only sees the rows the prefilter kept
+        val under = nodes(generates.head.child)
+        assert(under.exists(_.isInstanceOf[FileSourceScanExec]),
+          s"the explode does not read the scan:\n${generates.head}")
+        val prefilters = under.collect {
+          case f: FilterExec if f.condition.exists(_.isInstanceOf[Or]) &&
+            Set("text", "conv_id", "turn_idx", "role")
+              .subsetOf(f.condition.references.map(_.name).toSet) => f
+        }
+        assert(prefilters.nonEmpty,
+          s"no OR-of-checks filter under the explode:\n${generates.head}")
+      } finally r.unpersistAll()
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 

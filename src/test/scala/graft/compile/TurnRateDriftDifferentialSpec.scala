@@ -54,13 +54,13 @@ class TurnRateDriftDifferentialSpec extends GraftSuite {
   /** Runs the comparisons concurrently: each is a chain of small jobs, so
     * overlapping them keeps the local executor's cores busy.
     */
-  private def allSame(df: DataFrame,
-      configs: Seq[TurnRateDrift]): Seq[(Long, Long)] = {
+  private def allSame(df: DataFrame, configs: Seq[TurnRateDrift],
+      keyCol: String = "conv_id"): Seq[(Long, Long)] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    Await.result(Future.sequence(configs.map(c => Future(assertSame(df, c)))),
-      Duration.Inf)
+    Await.result(Future.sequence(configs.map(c =>
+      Future(assertSame(df, c, keyCol)))), Duration.Inf)
   }
 
   /** One config per decomposition × residual method. */
@@ -91,6 +91,44 @@ class TurnRateDriftDifferentialSpec extends GraftSuite {
       c <- perMethod((m, r) => TurnRateDrift(bucket = bucket,
         period = period, method = m, residMethod = r, residThreshold = 3.0))
     } yield c)
+  }
+
+  test("vendored sf0.01 transcripts: multi-turn buckets at 1 hour/3 and 1 day/3") {
+    // the kernel counts runs of equal bucket starts: buckets holding
+    // several turns must count as the reference's aggregate counts them
+    val t = Tables.transcripts(spark, sfTiny.replace("sf0.001", "sf0.01"))
+    for (bucket <- Seq("1 hour", "1 day")) {
+      val multi = t.groupBy(col("conv_id"), window(col("ts"), bucket))
+        .count().where(col("count") > 1).count()
+      assert(multi > 0, s"no multi-turn $bucket bucket")
+    }
+    val found = allSame(t, for {
+      bucket <- Seq("1 hour", "1 day")
+      c <- perMethod((m, r) => TurnRateDrift(bucket = bucket, period = 3,
+        method = m, residMethod = r, residThreshold = residThreshold(r)))
+    } yield c)
+    assert(found.map(_._1).sum > 0 && found.map(_._2).sum > 0, found)
+  }
+
+  test("rows with a null ts drop out of their conversation's series") {
+    // every 5th turn and the whole of conversation 7 lose their ts
+    val nulled = gen.withColumn("ts",
+      when(col("turn_idx") % 5 === 2 || col("conv_id") === "conv_00000007",
+        lit(null)).otherwise(col("ts")))
+    assert(nulled.where(col("ts").isNull).count() > 0)
+    val found = allSame(nulled, perMethod((m, r) => TurnRateDrift(
+      bucket = "1 minute", period = 7, method = m, residMethod = r,
+      residThreshold = residThreshold(r))))
+    assert(found.map(_._1).sum > 0 && found.map(_._2).sum > 0, found)
+  }
+
+  test("an integer conversation key groups and prints as the reference's") {
+    val keyed = gen.withColumn("conv_num",
+      regexp_extract(col("conv_id"), "[0-9]+", 0).cast("int"))
+    val found = allSame(keyed, perMethod((m, r) => TurnRateDrift(
+      bucket = "1 minute", period = 7, method = m, residMethod = r,
+      residThreshold = residThreshold(r))), keyCol = "conv_num")
+    assert(found.map(_._1).sum > 0 && found.map(_._2).sum > 0, found)
   }
 
   test("degenerate: empty table") {

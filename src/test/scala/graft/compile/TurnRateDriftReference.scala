@@ -8,7 +8,7 @@ import graft.dsl.{Check, TurnRateDrift}
 import graft.series.{Decomposition, Drift, SeriesKernels}
 
 /** The frame-chain form of turn-rate drift: each statistic as its own
-  * DataFrame pass (bucket groupBy + row_number window, STL groupByKey,
+  * DataFrame pass (bucket groupBy + row_number window, STL kernel,
   * percentile groupBy + join for the fences, the PSI/KS census chain,
   * count groupBys and verdict joins). It is the parity reference for
   * [[Validator.turnRateDrift]]'s single grouped kernel, which must match it

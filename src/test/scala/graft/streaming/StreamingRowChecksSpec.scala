@@ -39,7 +39,11 @@ class StreamingRowChecksSpec extends GraftSuite {
     // in-stream with the legs observed (and the NaN norm-leg guard held)
     T("c3", 1, Some("user"), Some("t_9"), Some(1.0), Some(Seq(1.0f))),
     T("c3", 2, Some("user"), Some("t_10"), Some(1.0),
-      Some(Seq(Float.NaN, 1.0f))))
+      Some(Seq(Float.NaN, 1.0f))),
+    // the text InSet below lists a null, so a text outside it has a NULL
+    // flag: beside a true ValueBounds flag, and beside a false one
+    T("c4", 0, Some("user"), Some("t_7"), Some(9.0)),
+    T("c4", 1, Some("assistant"), Some("t_8"), Some(1.0)))
 
   private val check = Check("rows", Seq(
     NotNull("role"),
@@ -61,7 +65,10 @@ class StreamingRowChecksSpec extends GraftSuite {
     // the eleventh: length bounds — "oops" (4) passes [3, 12], the long
     // email text flags in-stream with the LENGTH observed
     LengthBounds("text", lo = Some(3L), hi = Some(12L),
-      maxFailRate = 1.0)))
+      maxFailRate = 1.0),
+    // `text IN ('t_0', 't_1', NULL)` is null, never false, for any other
+    // text: the flag is null, and a null flag emits no row
+    InSet("text", Seq("t_0", "t_1", null), maxFailRate = 1.0)))
 
   private type VRow = (String, String, Int, String, String, String)
 
@@ -104,6 +111,24 @@ class StreamingRowChecksSpec extends GraftSuite {
       assert(expected.exists(r => r._1.startsWith("compliance") && r._5 == null),
         s"fixture lost the null-predicate row: $expected")
       assert(got == expected, s"streaming $got vs batch $expected")
+
+      // the rows emitted are exactly the (row, check) pairs whose flag is
+      // TRUE: the row-flag prefilter ORs the flags, and a null flag must
+      // neither emit a row nor hide a true flag of the same row
+      val df = turns.toDF("conv_id", "turn_idx", "role", "text", "v", "emb")
+      val flags = Validator.compileStateless(check.constraints).flatMap(sc =>
+        df.select(col("conv_id"), col("turn_idx"), sc.violated)
+          .as[(String, Int, Option[Boolean])].collect()
+          .map { case (conv, turn, v) => (sc.name, conv, turn, v) })
+      def flagsOf(conv: String, turn: Int) =
+        flags.filter(f => f._2 == conv && f._3 == turn).map(_._4).toSet
+      assert(flagsOf("c4", 0) == Set(None, Some(true), Some(false)) &&
+        flagsOf("c4", 1).contains(None), s"weak null-flag fixture: $flags")
+      val trueFlags = flags.collect {
+        case (name, conv, turn, Some(true)) => (name, conv, turn) }.toSet
+      for ((side, rows) <- Seq(("batch", expected), ("streaming", got)))
+        assert(rows.map(r => (r._1, r._2, r._3)) == trueFlags,
+          s"$side rows are not the true flags: $rows vs $trueFlags")
     } finally q.stop()
   }
 
