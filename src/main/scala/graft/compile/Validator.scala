@@ -1016,11 +1016,13 @@ object Validator {
     }
 
     // ---- pass 10: distribution drift vs a reference table ------------------
-    // PSI of the validated column against a blessed baseline dimension —
-    // the snapshot-regression check. One quantile pass over the baseline,
-    // a broadcast of its bins−1 edges, a codegen'd bin lambda over the
-    // current side; the single PSI row collects on the driver like the
-    // fused global stats (a 1-row aggregate, sanctioned).
+    // PSI (and, opted in, exact KS) of the validated column against a
+    // blessed baseline dimension — the snapshot-regression check. One
+    // distinct-value census of both sides and ONE sorted kernel over it
+    // (Drift.scoreCensus) score PSI and KS together; the single scored row
+    // collects on the driver like the fused global stats (a 1-row result,
+    // sanctioned). At the 10^12-row continuous-value extreme (census ~
+    // rows) the documented scale path remains Drift.ksSketch.
     outcomes ++= check.constraints.collect {
       case c @ DistributionDrift(columnName, dimName, dimCol, maxPsi, bins,
           maxKs) =>
@@ -1035,43 +1037,21 @@ object Validator {
             .select(col(columnName).cast("double").as("__v"))
             .where(col("__v").isNotNull && !isnan(col("__v")))
             .withColumn("__side", lit("current")))
-          .withColumn("__k", lit(1))
-        // ONE distinct-value side census feeds both the PSI and the KS
-        // collect; persisted across the two actions when KS is on, so
-        // the raw sides are scanned once per suite instead of once per
-        // statistic. The census is bounded by the DISTINCT value count
-        // (not rows) — far smaller than the r5-rejected idea of caching
-        // the raw `sided` union; at the 10^12-row continuous-value
-        // extreme (census ~ rows) the documented scale path remains
-        // Drift.ksSketch, as before.
-        val census = graft.series.Drift
-          .sideCensus(sided, "__v", "__side", Seq("__k"))
-        if (maxKs.isDefined)
-          census.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val psiRows = graft.series.Drift
-          .psiFromCensus(census, Seq("__k"), bins)
-          .select(col("psi"), col("n_cur")).collect()
-        // null / absent PSI = one side empty after null-scrub: "no
-        // signal", passes — emptiness is MinRows' finding
-        val psiVal: Option[Double] =
-          if (psiRows.isEmpty || psiRows(0).isNullAt(0)) None
-          else Some(psiRows(0).getDouble(0))
-        // KS half (opt-in): exact tie-correct two-sample D over the
-        // same persisted census
-        val ksVal: Option[Double] = maxKs.flatMap { _ =>
-          val rows = graft.series.Drift
-            .ksFromCensus(census, Seq("__k"))
-            .select(col("ks")).collect()
-          if (rows.isEmpty || rows(0).isNullAt(0)) None
-          else Some(rows(0).getDouble(0))
-        }
-        if (maxKs.isDefined) census.unpersist()
+        val census = graft.series.Drift.sideCensus(sided, "__v", "__side", Nil)
+        val scored = graft.series.Drift.scoreCensus(census, Nil, bins)
+          .select(col("psi"), col("n_cur"), col("ks"), col("__has_base"))
+          .collect().headOption
+        def stat(i: Int): Option[Double] =
+          scored.filterNot(_.isNullAt(i)).map(_.getDouble(i))
+        // null PSI = one side empty after null-scrub: "no signal", passes
+        // — emptiness is MinRows' finding
+        val psiVal = stat(0)
+        val ksVal = maxKs.flatMap(_ => stat(2))
         // rows = the current side's census, not the fused-stats
         // totalRows: a drift-only suite never runs the stats pass and a
-        // hardcoded 0 would read as "nothing scanned" (entropy precedent)
-        val curN =
-          if (psiRows.isEmpty || psiRows(0).isNullAt(1)) 0L
-          else psiRows(0).getLong(1)
+        // hardcoded 0 would read as "nothing scanned" (entropy precedent).
+        // Without a baseline there is no PSI row to count from: 0.
+        val curN = scored.filter(_.getBoolean(3)).fold(0L)(_.getLong(1))
         breached(c, curN, 0.0,
           psiVal.filter(_ > maxPsi).map(p =>
             (columnName, p.toString, s"psi<=$maxPsi vs $dimName.$dimCol")) ++
@@ -1349,7 +1329,6 @@ object Validator {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // ---- verdicts -----------------------------------------------------------
-    import spark.implicits._
     val perConvConstraints = rowChecks.map(rc => (rc.name, rc.maxRate)) ++
       check.constraints.collect {
         case c @ (_: RollingZDrift | _: ContiguousIndex | _: TurnCountBetween |
@@ -1372,9 +1351,13 @@ object Validator {
     // per-conversation constraints (e.g. schema-only) must not even PLAN a
     // groupBy over the data
     val perConvVerdicts = if (perConvConstraints.isEmpty) {
-      Seq.empty[(String, String, Boolean, Long, Long, Double)]
-        .toDF("partition_key", "constraint", "pass", "rows", "violations",
-          "violation_rate")
+      spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(Seq(StructField("partition_key", StringType),
+          StructField("constraint", StringType),
+          StructField("pass", BooleanType, nullable = false),
+          StructField("rows", LongType, nullable = false),
+          StructField("violations", LongType, nullable = false),
+          StructField("violation_rate", DoubleType, nullable = false))))
     } else conversationVerdicts(df, check.keyCol, perConvConstraints,
       allViolations)
 
@@ -1498,12 +1481,15 @@ object Validator {
     */
   private[graft] def conversationVerdicts(df: DataFrame, keyCol: String,
       constraints: Seq[(String, Double)], violations: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     val convRows = df
       .groupBy(coalesce(col(keyCol).cast("string"), lit("(null)")).as("conv_id"))
       .agg(count(lit(1)).as("rows"))
-    val cDf = constraints.toDF("constraint", "max_rate")
+    // an explicit schema, not implicits' toDF: no Scala reflection per call
+    import scala.jdk.CollectionConverters._
+    val cDf = df.sparkSession.createDataFrame(
+      constraints.map { case (name, rate) => Row(name, rate) }.asJava,
+      StructType(Seq(StructField("constraint", StringType),
+        StructField("max_rate", DoubleType, nullable = false))))
     val vCounts = violations
       .groupBy(coalesce(col("conv_id"), lit("(null)")).as("conv_id"),
         col("constraint"))

@@ -13,8 +13,9 @@ import graft.text.TextAnalysis
   *    16-byte digest, never on the text itself);
   *  - MinHash + LSH: explode→min aggregation for signatures, banding join
   *    for candidates — quadratic blowup confined to same-band buckets;
-  *  - SimHash: one agg per doc (64 conditional sums), near-dup pairs via
-  *    4x16-bit band join + bit_count hamming verify;
+  *  - SimHash: one elementwise vote-sum aggregate per doc, bits packed by
+  *    shifts; near-dup pairs via a chunk-banding join + bit_count hamming
+  *    verify;
   *  - n-gram Jaccard: inverted-index self-join (exact, for verification /
   *    small candidate sets).
   */
@@ -62,7 +63,7 @@ object Dedup {
     df.select(col(idCol), partial.as("__mhp"))
       .where(col("__mhp").isNotNull)
       .groupBy(col(idCol))
-      .agg(graft.agg.ElementMinAgg(col("__mhp"), numHashes).as("signature"))
+      .agg(graft.agg.ElementAgg.min(col("__mhp"), numHashes).as("signature"))
   }
 
   /** One-permutation MinHash signatures (Shrivastava & Li 2014, "densified
@@ -207,9 +208,10 @@ object Dedup {
       .where(col("est_jaccard") >= estJaccardMin)
   }
 
-  /** SimHash (64-bit) per document: per-bit weighted majority of token
-    * hashes. One explode + one agg of `bits` conditional sums; the packed
-    * signature is assembled from the sums in a final projection.
+  /** SimHash (64-bit) per document: per-bit majority of token hashes.
+    * Per-row vote arrays sum elementwise in ONE aggregate
+    * ([[graft.agg.ElementAgg]]); a final projection packs bit b, set where
+    * its vote sum is positive, as `1L << b` (bit 63 is the sign bit).
     */
   def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     simhashWith(df, idCol, textCol, portable = false, bits = 64)
@@ -226,25 +228,30 @@ object Dedup {
 
   /** Per-bit vote sums run MAP-SIDE in the [[graft.text.TextKernels]]
     * simhash kernel (one pass per row: normalize → tokenize → hash →
-    * vote), so the exchange carries one `bits`-int vote row per doc row
-    * instead of one row per TOKEN — the explode and its per-token
-    * interpreted hash column disappear (guide §2.3 "aggregate before you
-    * shuffle"). The groupBy still sums votes elementwise so duplicate
-    * idCol rows keep the exploded form's union semantics; null-text rows
-    * are filtered exactly like explode-of-null dropped them.
+    * vote), so the exchange carries one `bits`-long vote row per doc row
+    * instead of one row per TOKEN (guide §2.3 "aggregate before you
+    * shuffle"). The groupBy sums votes elementwise in one aggregate so
+    * duplicate idCol rows keep the exploded form's union semantics;
+    * null-text rows are filtered exactly like explode-of-null dropped
+    * them. The pack folds integer shifts over the bit positions: a double
+    * power of two would overflow its long cast at bit 63 under ANSI.
     */
   private def simhashWith(df: DataFrame, idCol: String, textCol: String,
       portable: Boolean, bits: Int): DataFrame = {
     val votes = graft.text.TextKernels.simhashVotesCol(col(textCol),
-      bits, portable)
-    val sums = (0 until bits).map(b =>
-      sum(element_at(col("__votes"), b + 1)).as(s"b_$b"))
+      bits, portable).cast("array<bigint>")
     val agged = df.select(col(idCol), votes.as("__votes"))
       .where(col("__votes").isNotNull)
-      .groupBy(col(idCol)).agg(sums.head, sums.tail: _*)
-    val packed = (0 until bits).map(b =>
-      when(col(s"b_$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ bitwiseOR _)
-    agged.select(col(idCol), packed.as("simhash"))
+      .groupBy(col(idCol))
+      .agg(graft.agg.ElementAgg.sum(col("__votes"), bits).as("__sums"))
+    val packed = aggregate(sequence(lit(0), lit(bits - 1)), lit(0L),
+      (acc, b) => acc.bitwiseOR(
+        when(element_at(col("__sums"), b + 1) > 0,
+          call_function("shiftleft", lit(1L), b))
+          .otherwise(lit(0L))))
+    // aggregate() types its accumulator nullable; the pack is never null,
+    // so the coalesce only keeps the signature column non-nullable
+    agged.select(col(idCol), coalesce(packed, lit(0L)).as("simhash"))
   }
 
   /** SimHash near-dup pairs: candidates share one of `maxHamming + 1`

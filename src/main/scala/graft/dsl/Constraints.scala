@@ -279,23 +279,22 @@ final case class TurnCountBetween(lo: Long = 1L, hi: Long = Long.MaxValue)
 /** Distribution drift vs a REFERENCE table — "does this snapshot's column
   * still look like the one we blessed?": PSI between the validated data's
   * `column` (current side) and a registered dimension's `dimColumn`
-  * (baseline side), with equal-frequency bins taken from the baseline's
-  * exact quantiles ([[graft.series.Drift.psi]] unchanged). One global
-  * verdict: pass iff PSI ≤ `maxPsi`; a failing suite also emits ONE
-  * global violation row observing the measured PSI. Null PSI (either
-  * side empty after null-scrub) is "no signal" and passes — emptiness is
-  * MinRows' finding. The baseline table rides a quantile pass + a tiny
-  * broadcast of its `bins−1` edges; the validated side is binned by a
-  * codegen'd lambda, never shuffled wider than (bin) rows.
+  * (baseline side), with `bins` equal-frequency bins taken from the
+  * baseline's exact quantiles. One global verdict: pass iff PSI ≤
+  * `maxPsi`; a failing suite also emits ONE global violation row observing
+  * the measured PSI. Null PSI (either side empty after null-scrub) is "no
+  * signal" and passes — emptiness is MinRows' finding. Both sides reduce
+  * to one distinct-value census, scored by one sorted kernel
+  * ([[graft.series.Drift.scoreCensus]]) that one collect reads.
   *
   * `maxKs` adds the KS half of the north star's "PSI/KS thresholds": the
   * exact two-sample Kolmogorov–Smirnov D between the column and the
-  * baseline (tie-correct RANGE-frame CDFs, [[graft.series.Drift.ks]]),
-  * pass iff D ≤ maxKs. PSI sees bucket-mass shifts; KS sees any CDF
-  * separation including ones PSI's 10 bins wash out. The KS pass is a
-  * second scan of both sides (a sort-based window) — opt in where the
-  * baseline dim is proportionate, or lean on the t-digest
-  * `Drift.ksSketch` variant in library code at the 10^12-row extreme.
+  * baseline ([[graft.series.Drift.ks]]), pass iff D ≤ maxKs. PSI sees
+  * bucket-mass shifts; KS sees any CDF separation including ones PSI's
+  * bins wash out. The same kernel scores it from the same census, so the
+  * KS half adds no scan and no job; at the 10^12-row continuous-value
+  * extreme (census ~ rows) lean on the t-digest `Drift.ksSketch` variant
+  * in library code.
   */
 final case class DistributionDrift(column: String, dim: String,
     dimColumn: String, maxPsi: Double = 0.25, bins: Int = 10,

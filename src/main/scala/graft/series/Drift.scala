@@ -1,8 +1,10 @@
 package graft.series
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable.ArrayBuilder
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.agg.Sketches
 
@@ -11,28 +13,19 @@ import graft.agg.Sketches
   *
   * The reference scores drift per-point with rolling z / residual outliers;
   * the north star adds PSI/KS thresholds over the same bucketed series.
-  * Exact variants below are pure DataFrame ops (windows/group-bys keyed on
-  * the series key — co-partitioned, no extra shuffles); the sketch variant
-  * rides the mergeable t-digests so a 100 TB baseline never gets rescanned.
+  * The exact variants share one distinct-value census ([[sideCensus]]) and
+  * one sorted kernel over it ([[scoreCensus]]): a map-side-combined
+  * aggregate, then `groupBy(keys).flatMapSortedGroups(value)` scoring PSI
+  * and KS per key in the JVM. The sketch variant rides the mergeable
+  * t-digests so a 100 TB baseline never gets rescanned.
   */
 object Drift {
 
-  /** PSI = Σ (p_i - q_i) · ln(p_i / q_i) over equal-frequency bins derived
-    * from the baseline side. Input: one DataFrame with `sideCol` ∈
-    * {'baseline','current'}; output: one row per key with psi.
-    *
-    * Bin edges are the baseline's exact per-key quantiles (interior edges
-    * of `bins` equal-frequency buckets); binning is a lambda over the tiny
-    * edges array (codegen'd, no UDF). Distributions are epsilon-clamped
-    * (1e-4) like standard PSI practice so empty bins don't blow up.
-    */
   /** Shared per-(key, value) side census: baseline/current counts per
-    * DISTINCT value. Both [[psi]] and [[ks]] derive from this ONE
-    * map-side-combined aggregation, so when a caller evaluates both over
-    * the same input (turn-rate drift, DistributionDrift) the identical
-    * census Exchange subtree is deduplicated by ReuseExchange and the raw
-    * rows are scanned once (guide §2.3 "aggregate before you shuffle" —
-    * everything downstream runs on the distinct-value census, not rows).
+    * DISTINCT value. [[psi]], [[ks]] and [[scoreCensus]] all read this ONE
+    * map-side-combined aggregation, so the raw rows are scanned once and
+    * everything downstream runs on the distinct-value census, not rows
+    * (guide §2.3 "aggregate before you shuffle").
     */
   def sideCensus(df: DataFrame, valueCol: String, sideCol: String,
       keyCols: Seq[String]): DataFrame =
@@ -40,96 +33,136 @@ object Drift {
       .agg(sum((col(sideCol) === "baseline").cast("long")).as("__cb"),
         sum((col(sideCol) === "current").cast("long")).as("__cc"))
 
-  def psi(df: DataFrame, valueCol: String, sideCol: String,
-      keyCols: Seq[String], bins: Int = 10, eps: Double = 1e-4): DataFrame =
-    psiFromCensus(sideCensus(df, valueCol, sideCol, keyCols), keyCols,
-      bins, eps)
-
-  /** PSI over a pre-built [[sideCensus]] — callers that evaluate PSI and
-    * KS as SEPARATE actions (DistributionDrift's two collects) persist
-    * the census once instead of rescanning both sides per action.
+  /** PSI = Σ (p_i - q_i) · ln(p_i / q_i) over equal-frequency bins derived
+    * from the baseline side. Input: one DataFrame with `sideCol` ∈
+    * {'baseline','current'}; output: one row per key with a baseline
+    * (`psi`, and `n_cur`, the current side's row count) — a key with no
+    * baseline row, or with a null key component, has no row. `psi` is null
+    * when the current side is empty. Keyless, the one global row is always
+    * there, its `psi` null when either side is empty.
     */
-  def psiFromCensus(census: DataFrame, keyCols: Seq[String],
-      bins: Int = 10, eps: Double = 1e-4): DataFrame = {
-    val key = keyCols.map(col)
-    val qs = (1 until bins).map(i => i.toDouble / bins)
-    // exact WEIGHTED percentile over the census ≡ percentile over the raw
-    // baseline rows (the Percentile aggregate accumulates a value→count
-    // map internally either way; integer frequencies keep it exact).
-    // Column API, not SQL text: a non-identifier column name must stay a
-    // column reference rather than re-parse as an expression
-    val edges = census.where(col("__cb") > 0).groupBy(key: _*).agg(
-      percentile(col("__ksv"), array(qs.map(lit): _*), col("__cb")).as("edges"))
-    // bin = #edges strictly below the value. The `size(filter(edges, e =>
-    // v > e))` form is a HigherOrderFunction — interpreted per row per
-    // edge; `bins` is statically known here, so the identical count is a
-    // codegen'd when-chain over element_at (null parity: null edges →
-    // null bin, as size(filter(null)) was; null value → every term 0 →
-    // bin 0, as the all-dropped filter was).
-    val binOf = when(col("edges").isNotNull,
-      (1 until bins).map(i =>
-        when(col("__ksv") > element_at(col("edges"), i), 1).otherwise(0))
-        .reduce(_ + _))
-    val counts = census.join(edges, keyCols)
-      .withColumn("bin", binOf)
-      .groupBy((key :+ col("bin")): _*).agg(
-        sum(col("__cb")).as("n_base"),
-        sum(col("__cc")).as("n_cur"))
-    // empty sides (e.g. a single-bucket conversation) yield null PSI, not
-    // a divide-by-zero under ANSI mode — callers treat null as "no signal"
-    val wKey = Window.partitionBy(key: _*)
-    val tBase = sum("n_base").over(wKey)
-    val tCur = sum("n_cur").over(wKey)
-    counts
-      .withColumn("p", when(tBase > 0, greatest(col("n_base") / tBase, lit(eps))))
-      .withColumn("q", when(tCur > 0, greatest(col("n_cur") / tCur, lit(eps))))
-      .groupBy(key: _*)
-      .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"),
-        // current-side row count, piggybacked so verdict "rows" never
-        // needs a second scan (callers select what they use)
-        sum(col("n_cur")).cast("long").as("n_cur"))
+  def psi(df: DataFrame, valueCol: String, sideCol: String,
+      keyCols: Seq[String], bins: Int = 10, eps: Double = 1e-4): DataFrame = {
+    val scored = scoreCensus(sideCensus(df, valueCol, sideCol, keyCols),
+      keyCols, bins, eps)
+    if (keyCols.isEmpty)
+      scored.agg(first(col("psi")).as("psi"), first(col("n_cur")).as("n_cur"))
+    else scored.where(col("__has_base"))
+      .select((keyCols.map(col) :+ col("psi") :+ col("n_cur")): _*)
   }
 
   /** Exact two-sample Kolmogorov–Smirnov statistic per key:
-    * D = max_x |F_baseline(x) - F_current(x)|, computed with one window
-    * pass over values sorted within each key (running counts of each side).
-    *
-    * The running counts use a RANGE frame ordered by the value alone, so
-    * all tie peers (rows sharing a value, from either side) are included
-    * before the CDF gap is evaluated — the empirical CDF is only defined
-    * at distinct values. A ROWS frame ordered by (value, side) would
-    * evaluate mid-tie and report KS = 1.0 for two identical all-tied
-    * samples (true D = 0); turn-rate series are integer counts, so ties
-    * are the common case, not the corner.
+    * D = max_x |F_baseline(x) - F_current(x)|, the CDF gap evaluated at
+    * every distinct value of the census (so tie peers from either side are
+    * all counted before the gap is taken — KS = 0 for two identical
+    * all-tied samples). One row per key; `ks` is null when either side is
+    * empty.
     */
   def ks(df: DataFrame, valueCol: String, sideCol: String,
-      keyCols: Seq[String]): DataFrame =
-    ksFromCensus(sideCensus(df, valueCol, sideCol, keyCols), keyCols)
+      keyCols: Seq[String]): DataFrame = {
+    val scored = scoreCensus(sideCensus(df, valueCol, sideCol, keyCols),
+      keyCols)
+    if (keyCols.isEmpty) scored.agg(first(col("ks")).as("ks"))
+    else scored.select((keyCols.map(col) :+ col("ks")): _*)
+  }
 
-  /** KS over a pre-built [[sideCensus]] (see [[psiFromCensus]]). */
-  def ksFromCensus(census: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val key = keyCols.map(col)
-    // The CDF gap only changes at DISTINCT values, so the side counts are
-    // reduced per (key, value) FIRST (map-side-combined hash agg) and the
-    // window sort runs over the distinct-value census, not the raw rows —
-    // for the global (keyless) tier this shrinks the single-partition
-    // window from n rows to the distinct-value count (guide §2.3
-    // "aggregate before you shuffle"; the previous form sorted every raw
-    // row in one partition). The RANGE-frame tie handling is now implicit:
-    // rows are unique per (key, value), so the cumulative sums ARE the
-    // tie-correct CDFs evaluated at each distinct value — identical D.
-    val counts = census
-    val wKey = Window.partitionBy(key: _*)
-    val wOrd = Window.partitionBy(key: _*).orderBy(col("__ksv"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val nBase = sum(col("__cb")).over(wKey)
-    val nCur = sum(col("__cc")).over(wKey)
-    counts
-      .withColumn("cdf_base", when(nBase > 0, sum(col("__cb")).over(wOrd) / nBase))
-      .withColumn("cdf_cur", when(nCur > 0, sum(col("__cc")).over(wOrd) / nCur))
-      .withColumn("d", abs(col("cdf_base") - col("cdf_cur")))
-      .groupBy(key: _*)
-      .agg(max(col("d")).as("ks"))
+  /** PSI and exact KS per key over a [[sideCensus]], in one sorted kernel:
+    * `groupBy(keys).flatMapSortedGroups(__ksv)` streams each key's
+    * value-sorted census into primitive arrays (O(distinct values) state,
+    * no `Row`s held) and scores it with [[censusPsiKs]]. One row per key
+    * group: the keys, `psi`, `n_cur`, `ks`, and `__has_base` — a baseline
+    * row exists and no key component is null, the keys the frame form's
+    * inner join to the baseline edges kept. Keyless, the census is scored
+    * as one group, present only when the census is non-empty.
+    */
+  def scoreCensus(census: DataFrame, keyCols: Seq[String], bins: Int = 10,
+      eps: Double = 1e-4): DataFrame = {
+    require(bins >= 1, s"bins must be >= 1, got $bins")
+    val in = if (keyCols.isEmpty) census.withColumn("__all", lit(true))
+      else census
+    val keys = if (keyCols.isEmpty) Seq("__all") else keyCols
+    val keyType = StructType(keys.map(in.schema(_)))
+    val vAt = in.schema.fieldIndex("__ksv")
+    val cbAt = in.schema.fieldIndex("__cb")
+    val ccAt = in.schema.fieldIndex("__cc")
+    val outType = StructType(keyType.fields ++ Seq(
+      StructField("psi", DoubleType), StructField("n_cur", LongType),
+      StructField("ks", DoubleType),
+      StructField("__has_base", BooleanType, nullable = false)))
+    val scored = in.groupBy(keys.map(col): _*)
+      .as[Row, Row](Encoders.row(keyType), Encoders.row(in.schema))
+      .flatMapSortedGroups(col("__ksv")) { (k, rows) =>
+        val values = ArrayBuilder.make[Double]
+        val cb = ArrayBuilder.make[Long]
+        val cc = ArrayBuilder.make[Long]
+        var nullFirst = false
+        rows.foreach { r =>
+          // the census holds one row per distinct value; a null value
+          // sorts first, and a null count (null sides only) counts 0
+          if (r.isNullAt(vAt)) nullFirst = true
+          values += (if (r.isNullAt(vAt)) 0.0
+            else r.get(vAt).asInstanceOf[Number].doubleValue)
+          cb += (if (r.isNullAt(cbAt)) 0L else r.getLong(cbAt))
+          cc += (if (r.isNullAt(ccAt)) 0L else r.getLong(ccAt))
+        }
+        val (bs, cs) = (cb.result(), cc.result())
+        val (psiV, ksV) = censusPsiKs(values.result(), bs, cs, nullFirst,
+          bins, eps)
+        val hasBase = bs.exists(_ > 0) &&
+          (0 until k.length).forall(!k.isNullAt(_))
+        Iterator.single(Row.fromSeq(k.toSeq ++ Seq(psiV.getOrElse(null),
+          cs.sum, ksV.getOrElse(null), hasBase)))
+      }(Encoders.row(outType))
+      .toDF()
+    if (keyCols.isEmpty) scored.drop("__all") else scored
+  }
+
+  /** `x > y` as Spark SQL orders doubles: numeric, -0.0 = 0.0, and NaN
+    * equal to itself and above every other value.
+    */
+  private def sqlGreater(x: Double, y: Double): Boolean =
+    x != y && java.lang.Double.compare(x, y) > 0
+
+  /** PSI and exact KS of one key's census: `values` ascending in Spark's
+    * order (distinct; with `nullFirst` the first entry stands for the null
+    * value), `cb`/`cc` their baseline/current counts. Both are None unless
+    * both sides are non-empty.
+    *
+    * PSI takes `bins` equal-frequency bins whose edges are the baseline's
+    * frequency-weighted `percentile` ([[Percentile.weighted]], nulls
+    * excluded), bins a value by how many edges it is `>` in Spark's
+    * ordering (a null value, or every value when the baseline holds only
+    * nulls, lands in bin 0), clamps each side's share at `eps` and sums
+    * the bins that hold a census row in bin order with `StrictMath.log`.
+    * KS is the largest gap between the running CDFs, nulls counted first.
+    */
+  private[series] def censusPsiKs(values: Array[Double], cb: Array[Long],
+      cc: Array[Long], nullFirst: Boolean, bins: Int,
+      eps: Double): (Option[Double], Option[Double]) = {
+    val tB = cb.sum
+    val tC = cc.sum
+    if (tB == 0 || tC == 0) return (None, None)
+    val from = if (nullFirst) 1 else 0
+    val base = (from until values.length).filter(cb(_) > 0)
+    val edges = Percentile.weighted(base.map(values).toArray,
+      base.map(cb).toArray, (1 until bins).map(_.toDouble / bins): _*)
+    val nb = new Array[Long](bins)
+    val nc = new Array[Long](bins)
+    val seen = new Array[Boolean](bins)
+    var cumB = 0L; var cumC = 0L; var ks = 0.0
+    for (i <- values.indices) {
+      val bin = if (i < from) 0 else edges.count(sqlGreater(values(i), _))
+      nb(bin) += cb(i); nc(bin) += cc(i); seen(bin) = true
+      cumB += cb(i); cumC += cc(i)
+      ks = math.max(ks, math.abs(cumB.toDouble / tB - cumC.toDouble / tC))
+    }
+    var psi = 0.0
+    for (i <- 0 until bins if seen(i)) {
+      val p = math.max(nb(i).toDouble / tB, eps)
+      val q = math.max(nc(i).toDouble / tC, eps)
+      psi += (p - q) * StrictMath.log(p / q)
+    }
+    (Some(psi), Some(ks))
   }
 
   /** Sketch-based KS for the 100 TB path: one t-digest per side (mergeable,

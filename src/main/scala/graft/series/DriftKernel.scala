@@ -22,10 +22,8 @@ import graft.dsl.TurnRateDrift
   * Each statistic repeats the arithmetic of the Spark SQL it replaces:
   * residual fences use Spark's `percentile` ([[Percentile]]) with a
   * 1e-9-relative tolerance; z-scores use `avg` and `stddev_samp`'s update
-  * formulas; PSI takes 10 equal-frequency bins from the baseline's
-  * frequency-weighted percentile edges, bins by `v > edge`, clamps at
-  * 1e-4 and uses `StrictMath.log`; KS is the exact CDF gap over the
-  * distinct values.
+  * formulas; PSI (10 bins, 1e-4 clamp) and KS come from
+  * [[Drift.censusPsiKs]], the arithmetic `Drift.psi` and `Drift.ks` use.
   *
   * Both entry points emit one row per key: the key as its own type,
   * `rows` (buckets), `violations`, `pass`, and the `anomalies` array of
@@ -185,40 +183,16 @@ object DriftKernel {
   }
 
   /** PSI and exact KS between the first half of the series (baseline:
-    * idx·2 <= last idx) and the rest; both None when the current half is
-    * empty (a single-bucket series carries no drift signal).
+    * idx·2 <= last idx) and the rest, over its distinct-value census
+    * ([[Drift.censusPsiKs]]); both None when the current half is empty (a
+    * single-bucket series carries no drift signal).
     */
   private def psiKs(y: Array[Long]): (Option[Double], Option[Double]) = {
     val last = y.length - 1
-    // distinct-value census: baseline / current counts per value
-    val census = y.indices.groupBy(y(_)).toArray.sortBy(_._1).map {
-      case (v, is) =>
-        val nb = is.count(_ * 2 <= last).toLong
-        (v, nb, is.size - nb)
-    }
-    val tB = census.map(_._2).sum
-    val tC = census.map(_._3).sum
-    if (tC == 0) return (None, None)
-
-    val base = census.filter(_._2 > 0)
-    val edges = Percentile.weighted(base.map(_._1.toDouble), base.map(_._2),
-      (1 until Bins).map(_.toDouble / Bins): _*)
-    val nb = new Array[Long](Bins)
-    val nc = new Array[Long](Bins)
-    val seen = new Array[Boolean](Bins)
-    var cumB = 0L; var cumC = 0L; var ks = 0.0
-    for ((v, b, c) <- census) {
-      val bin = edges.count(v.toDouble > _)
-      nb(bin) += b; nc(bin) += c; seen(bin) = true
-      cumB += b; cumC += c
-      ks = math.max(ks, math.abs(cumB.toDouble / tB - cumC.toDouble / tC))
-    }
-    var psi = 0.0
-    for (i <- 0 until Bins if seen(i)) {
-      val pb = math.max(nb(i).toDouble / tB, Eps)
-      val qc = math.max(nc(i).toDouble / tC, Eps)
-      psi += (pb - qc) * StrictMath.log(pb / qc)
-    }
-    (Some(psi), Some(ks))
+    val census = y.indices.groupBy(y(_)).toArray.sortBy(_._1)
+    val nb = census.map(_._2.count(_ * 2 <= last).toLong)
+    Drift.censusPsiKs(census.map(_._1.toDouble), nb,
+      census.indices.map(i => census(i)._2.size - nb(i)).toArray,
+      nullFirst = false, Bins, Eps)
   }
 }

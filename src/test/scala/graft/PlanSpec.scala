@@ -477,4 +477,85 @@ class PlanSpec extends GraftSuite {
     assert(folds <= 1,
       s"langId fold instantiated $folds times for 3 lang bounds on one column")
   }
+
+  test("Drift.psi / Drift.ks: the census exchange, then one sorted kernel — no window, no join, no cache") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.functions._
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val sided = spark.range(0, 400).select(
+        (col("id") % 4).as("k"), (col("id") % 37).cast("double").as("v"),
+        when(col("id") % 2 === 0, "baseline").otherwise("current").as("side"))
+      for (df <- Seq(series.Drift.psi(sided, "v", "side", Seq("k")),
+          series.Drift.ks(sided, "v", "side", Seq("k")))) {
+        df.collect()
+        val plan = df.queryExecution.executedPlan
+        // the census aggregate's exchange on (key, value), under its
+        // partial aggregate, and the kernel's on the key alone
+        val keys = plan.collect { case e: ShuffleExchangeExec =>
+          e.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+            .map(_.asInstanceOf[AttributeReference].name) }
+        assert(keys == Seq(Seq("k"), Seq("k", "v")), s"exchanges:\n$plan")
+        assert(plan.collect { case w: WindowExec => w }.isEmpty, s"window:\n$plan")
+        assert(plan.collect { case j: BroadcastHashJoinExec => j }.isEmpty,
+          s"broadcast join:\n$plan")
+        assert(plan.collect { case m: InMemoryTableScanExec => m }.isEmpty,
+          s"cached relation:\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
+  test("DistributionDrift with maxKs: PSI and KS in ONE collect, census never persisted") {
+    import spark.implicits._
+    import graft.dsl.{Check, DistributionDrift}
+    val store = spark.sharedState.statusStore
+    val before = store.executionsList().map(_.executionId).toSet
+    val cur = (0 until 300).map(i => ("c", i, (i % 50).toDouble + 3.0))
+      .toDF("conv_id", "turn_idx", "value")
+    val ctx = compile.Validator.Context(Map(
+      "ref" -> (0 until 300).map(i => (i % 50).toDouble).toDF("v")))
+    val r = compile.Validator.validate(cur, Check("dd", Seq(
+      DistributionDrift("value", "ref", "v", maxPsi = 0.0, maxKs = Some(0.0)))), ctx)
+    assert(r.violations.where(org.apache.spark.sql.functions.col("constraint")
+      .startsWith("dist_drift")).count() == 2)
+    r.unpersistAll()
+    // the UI store fills asynchronously, in event order: once a marker
+    // action run after validate() shows up, every execution of validate()
+    // has been recorded, so a late second census execution is counted too
+    spark.range(1).select(org.apache.spark.sql.functions.lit("__settled__")
+      .as("m")).collect()
+    def newPlans(): Seq[String] = store.executionsList()
+      .filterNot(e => before(e.executionId)).map(_.physicalPlanDescription)
+    var tries = 0
+    while (!newPlans().exists(_.contains("__settled__")) && tries < 100) {
+      Thread.sleep(100); tries += 1
+    }
+    assert(newPlans().exists(_.contains("__settled__")), "marker never recorded")
+    val plans = newPlans().filter(_.contains("__ksv"))
+    assert(plans.size == 1, s"${plans.size} executions read the census")
+    assert(!plans.head.contains("InMemory"), s"persisted census:\n${plans.head}")
+  }
+
+  test("Dedup.simhash: the signature aggregate holds ONE aggregate function") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val docs = sources.Tables.documents(spark, sfTiny)
+      for (sims <- Seq(dedup.Dedup.simhash(docs, "doc_id", "text"),
+          dedup.Dedup.simhashReproducible(docs, "doc_id", "text"))) {
+        sims.collect()
+        val plan = sims.queryExecution.executedPlan
+        val aggs = plan.collect { case a: BaseAggregateExec => a }
+        // the partial and the final half of the one vote-sum aggregate
+        assert(aggs.size == 2, s"aggregates:\n$plan")
+        for (a <- aggs)
+          assert(a.aggregateExpressions.size == 1, s"aggregate:\n$a")
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
 }

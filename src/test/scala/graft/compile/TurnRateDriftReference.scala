@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dsl.{Check, TurnRateDrift}
-import graft.series.{Decomposition, Drift, SeriesKernels}
+import graft.series.{Decomposition, DriftReference, SeriesKernels}
 
 /** The frame-chain form of turn-rate drift: each statistic as its own
   * DataFrame pass (bucket groupBy + row_number window, STL kernel,
@@ -55,8 +55,8 @@ object TurnRateDriftReference {
       .withColumn("__max_idx", max(col("idx")).over(wKey))
       .withColumn("side", when(col("idx") * 2 <= col("__max_idx"), "baseline")
         .otherwise("current"))
-    val psiDf = Drift.psi(sided, "n_turns", "side", Seq(key))
-    val ksDf = Drift.ks(sided, "n_turns", "side", Seq(key))
+    val psiDf = DriftReference.psi(sided, "n_turns", "side", Seq(key))
+    val ksDf = DriftReference.ks(sided, "n_turns", "side", Seq(key))
     val residCounts = anomalies.groupBy(col(key))
       .agg(count(lit(1)).as("resid_anomalies"))
     val bucketCounts = series.groupBy(col(key)).agg(count(lit(1)).as("rows"))

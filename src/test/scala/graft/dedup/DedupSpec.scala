@@ -110,6 +110,27 @@ class DedupSpec extends GraftSuite {
     assert(pairs.contains((1L, 2L)))
   }
 
+  test("simhash signatures equal the per-bit conditional-sum form, bit 63 included") {
+    val corpus = graft.sources.Tables.documents(spark, sfTiny)
+      .select("doc_id", "text").unionByName(docs)
+    for ((bits, portable, sims) <- Seq(
+        (64, false, Dedup.simhash(corpus, "doc_id", "text")),
+        (60, true, Dedup.simhashReproducible(corpus, "doc_id", "text")))) {
+      val votes = graft.text.TextKernels.simhashVotesCol(col("text"), bits, portable)
+      val sums = (0 until bits).map(b => sum(element_at(col("__v"), b + 1)).as(s"b_$b"))
+      val reference = corpus.select(col("doc_id"), votes.as("__v"))
+        .where(col("__v").isNotNull).groupBy(col("doc_id")).agg(sums.head, sums.tail: _*)
+        .select(col("doc_id"), (0 until bits).map(b =>
+          when(col(s"b_$b") > 0, lit(1L << b)).otherwise(lit(0L)))
+          .reduce(_ bitwiseOR _).as("simhash"))
+      assert(sims.schema == reference.schema, sims.schema.treeString)
+      assert(sims.exceptAll(reference).count() == 0 &&
+        reference.exceptAll(sims).count() == 0, s"$bits-bit signatures differ")
+      if (bits == 64) assert(sims.where(col("simhash") < 0).count() > 0,
+        "no signature sets bit 63")
+    }
+  }
+
   test("exact ngram jaccard matches hand computation") {
     val two = Seq((1L, "a b c d e"), (2L, "a b c d x")).toDF("doc_id", "text")
     // 3-shingles: {abc,bcd,cde} vs {abc,bcd,cdx}: inter=2, union=4 → 0.5
