@@ -209,6 +209,19 @@ class SuggestionsSpec extends GraftSuite {
     assert(SuiteConfig.parse(SuiteConfig.render(allTypes)) == allTypes)
   }
 
+  test("render writes every constraint type byte-identical to the golden") {
+    // pins the written format: key order, number forms and every default
+    // written out explicitly
+    val check = allTypes.copy(constraints = allTypes.constraints :+
+      TextEquals("text", org.apache.spark.sql.GraftBridge.column(
+        org.apache.spark.sql.catalyst.parser.CatalystSqlParser.parseExpression(
+          "concat('turn_', cast(turn_idx as string))"))))
+    val golden = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("src/test/resources/goldens/suite_all_types.yaml")),
+      "UTF-8")
+    assert(SuiteConfig.render(check) == golden)
+  }
+
   test("the round-trip fixture covers EVERY type in the constraint ADT (completeness ratchet)") {
     // a new constraint type added to the ADT without render/parse (or
     // without joining this fixture) fails HERE, not hours into a config
