@@ -2,9 +2,14 @@ package graft.dsl
 
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.fasterxml.jackson.dataformat.yaml.YAMLFactory
+import org.apache.spark.sql.{Column, GraftBridge, functions}
+import org.apache.spark.sql.types.DataType
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+import scala.util.Try
 
 /** Config-file face of the constraint DSL — the engine analog of the
   * reference's YAML-driven configuration (`config/regions.yaml:54-58`
@@ -30,10 +35,13 @@ import scala.jdk.CollectionConverters._
   * missing required field fails immediately with the offending name — in a
   * 10^12-turn run a silently-dropped typo ("colum") would surface as a
   * wrong verdict hours later, so the config layer refuses it up front.
-  * Field names and defaults mirror the [[Constraint]] case classes
-  * one-for-one; `text_equals` takes `expectedSql`, compiled via
-  * `functions.expr` (per-turn text equality as ANSI SQL over the fact's
-  * own columns).
+  *
+  * One codec table (`codecs` below) is the only place a constraint type's
+  * YAML name, field names, required/optional status and defaults live: one
+  * entry per type, its fields in case-class parameter order. [[parse]],
+  * [[render]] and [[supportedTypes]] all read that table. `text_equals`
+  * takes `expectedSql`, compiled via `functions.expr` (per-turn text
+  * equality as ANSI SQL over the fact's own columns).
   */
 object SuiteConfig {
 
@@ -41,654 +49,362 @@ object SuiteConfig {
   private val mapper = new ObjectMapper(new YAMLFactory())
 
   /** Parse a suite document (YAML or JSON) into a [[Check]]. */
-  def parse(text: String): Check = {
-    val root = mapper.readTree(text)
-    require(root != null && root.isObject, "suite config: top level must be a mapping")
-    known(root, "suite", Set("name", "keyCol", "orderCol", "tsCol", "dims",
-      "constraints"))
-    val cs = req(root, "constraints", "suite")
-    require(cs.isArray && cs.size > 0, "suite config: 'constraints' must be a non-empty list")
-    Check(
-      name = str(root, "name", "suite"),
-      constraints = cs.elements().asScala.map(constraint).toSeq,
-      keyCol = optStr(root, "keyCol", "conv_id", "suite"),
-      orderCol = optStr(root, "orderCol", "turn_idx", "suite"),
-      tsCol = optStr(root, "tsCol", "ts", "suite"))
-  }
+  def parse(text: String): Check = parseTree(mapper.readTree(text))
 
   /** Dimension-table paths declared by the config (name -> parquet path);
     * the caller (e.g. [[graft.Runner]]) loads and registers them.
     */
-  def dims(text: String): Map[String, String] = {
-    val root = mapper.readTree(text)
-    Option(root.get("dims")) match {
-      case None => Map.empty
-      case Some(d) =>
-        require(d.isObject, "suite config: 'dims' must be a mapping of name -> path")
-        d.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }
-  }
+  def dims(text: String): Map[String, String] = dimsOf(mapper.readTree(text))
 
   /** Read + parse a suite file. */
   def load(path: String): Check = parse(readFile(path))
-
-  /** Dim paths from a suite file. */
-  def loadDims(path: String): Map[String, String] = dims(readFile(path))
 
   /** One read of the file for both the Check and its dims map — two
     * separate load calls could observe different documents if the file is
     * swapped between them.
     */
   def loadWithDims(path: String): (Check, Map[String, String]) = {
-    val text = readFile(path)
-    (parse(text), dims(text))
+    val root = mapper.readTree(readFile(path))
+    (parseTree(root), dimsOf(root))
   }
 
   private def readFile(path: String): String =
     new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path)), "UTF-8")
 
-  // ---- per-constraint builders ----------------------------------------------
-
-  private def constraint(n: JsonNode): Constraint = {
-    require(n.isObject, "suite config: each constraint must be a mapping")
-    val t = str(n, "type", "constraint")
-    def ctx = s"constraint '$t'"
-    t match {
-      case "not_null" =>
-        known(n, ctx, Set("type", "column", "maxNullRate"))
-        NotNull(str(n, "column", ctx), optD(n, "maxNullRate", 0.0, ctx))
-      case "in_set" =>
-        known(n, ctx, Set("type", "column", "allowed", "maxFailRate"))
-        val a = req(n, "allowed", ctx)
-        require(a.isArray, s"$ctx: 'allowed' must be a list")
-        InSet(str(n, "column", ctx),
-          a.elements().asScala.map(_.asText()).toSeq,
-          optD(n, "maxFailRate", 0.0, ctx))
-      case "matches_regex" =>
-        known(n, ctx, Set("type", "column", "regex", "maxFailRate"))
-        MatchesRegex(str(n, "column", ctx), str(n, "regex", ctx),
-          optD(n, "maxFailRate", 0.0, ctx))
-      case "value_bounds" =>
-        known(n, ctx, Set("type", "column", "lo", "hi", "maxFailRate"))
-        val c = ValueBounds(str(n, "column", ctx),
-          opt(n, "lo", ctx)(_.isNumber, "a number").map(_.asDouble()),
-          opt(n, "hi", ctx)(_.isNumber, "a number").map(_.asDouble()),
-          optD(n, "maxFailRate", 0.0, ctx))
-        require(c.lo.nonEmpty || c.hi.nonEmpty, s"$ctx: need 'lo' and/or 'hi'")
-        c
-      case "text_equals" =>
-        known(n, ctx, Set("type", "column", "expectedSql"))
-        TextEquals(str(n, "column", ctx),
-          org.apache.spark.sql.functions.expr(str(n, "expectedSql", ctx)))
-      case "expected_schema" =>
-        known(n, ctx, Set("type", "columns", "allowExtra"))
-        val c = req(n, "columns", ctx)
-        require(c.isObject && c.size > 0,
-          s"$ctx: 'columns' must be a non-empty mapping of name -> DDL type")
-        // sorted by name: the check is order-insensitive and Jackson's
-        // object nodes don't guarantee document order, so sorting keeps the
-        // parsed constraint deterministic across parser versions
-        val cols = c.properties().asScala.map { e =>
-          require(e.getValue.isTextual,
-            s"$ctx: column '${e.getKey}' type must be a DDL string")
-          e.getKey -> e.getValue.asText()
-        }.toSeq.sortBy(_._1)
-        // typo'd DDL fails HERE with the column name, not hours later as
-        // a bare ParseException inside the validator
-        cols.foreach { case (name, t) =>
-          try org.apache.spark.sql.types.DataType.fromDDL(t)
-          catch { case e: Exception => throw new IllegalArgumentException(
-            s"suite config: $ctx column '$name' has unparseable DDL type " +
-              s"'$t'", e) }
-        }
-        ExpectedSchema(cols, optB(n, "allowExtra", true, ctx))
-      case "unique_key" =>
-        known(n, ctx, Set("type", "columns"))
-        val c = req(n, "columns", ctx)
-        require(c.isArray && c.size > 0, s"$ctx: 'columns' must be a non-empty list")
-        UniqueKey(c.elements().asScala.map(_.asText()).toSeq)
-      case "referential" =>
-        known(n, ctx, Set("type", "column", "dim", "dimColumn", "nullOk",
-          "broadcastDim", "keyCensus"))
-        ReferentialIntegrity(str(n, "column", ctx), str(n, "dim", ctx),
-          str(n, "dimColumn", ctx), optB(n, "nullOk", true, ctx),
-          optB(n, "broadcastDim", true, ctx),
-          optB(n, "keyCensus", false, ctx))
-      case "asof_integrity" =>
-        known(n, ctx, Set("type", "column", "dim", "dimColumn", "dimTsColumn",
-          "granularity", "nullOk", "broadcastDim"))
-        AsOfIntegrity(str(n, "column", ctx), str(n, "dim", ctx),
-          str(n, "dimColumn", ctx), str(n, "dimTsColumn", ctx),
-          optStr(n, "granularity", "day", ctx), optB(n, "nullOk", true, ctx),
-          optB(n, "broadcastDim", true, ctx))
-      case "min_rows" =>
-        known(n, ctx, Set("type", "n"))
-        MinRows(lng(n, "n", ctx))
-      case "mean_between" =>
-        known(n, ctx, Set("type", "column", "lo", "hi"))
-        MeanBetween(str(n, "column", ctx), dbl(n, "lo", ctx), dbl(n, "hi", ctx))
-      case "stddev_between" =>
-        known(n, ctx, Set("type", "column", "lo", "hi"))
-        StddevBetween(str(n, "column", ctx), dbl(n, "lo", ctx), dbl(n, "hi", ctx))
-      case "quantile_between" =>
-        known(n, ctx, Set("type", "column", "q", "lo", "hi", "approx"))
-        QuantileBetween(str(n, "column", ctx), dbl(n, "q", ctx),
-          dbl(n, "lo", ctx), dbl(n, "hi", ctx), optB(n, "approx", true, ctx))
-      case "distinct_count_between" =>
-        known(n, ctx, Set("type", "column", "lo", "hi"))
-        DistinctCountBetween(str(n, "column", ctx), lng(n, "lo", ctx),
-          lng(n, "hi", ctx))
-      case "max_key_share" =>
-        known(n, ctx, Set("type", "column", "maxFrac", "k"))
-        MaxKeyShare(str(n, "column", ctx), optD(n, "maxFrac", 1.0 / 512, ctx),
-          optI(n, "k", 2048, ctx))
-      case "robust_z" =>
-        known(n, ctx, Set("type", "column", "threshold", "approx"))
-        RobustZ(str(n, "column", ctx), optD(n, "threshold", 3.5, ctx),
-          optB(n, "approx", true, ctx))
-      case "iqr_outliers" =>
-        known(n, ctx, Set("type", "column", "k", "approx"))
-        IqrOutliers(str(n, "column", ctx), optD(n, "k", 2.0, ctx),
-          optB(n, "approx", true, ctx))
-      case "global_z" =>
-        known(n, ctx, Set("type", "column", "threshold"))
-        GlobalZ(str(n, "column", ctx), optD(n, "threshold", 3.0, ctx))
-      case "rolling_z_drift" =>
-        known(n, ctx, Set("type", "column", "window", "threshold"))
-        RollingZDrift(str(n, "column", ctx), optI(n, "window", 24, ctx),
-          optD(n, "threshold", 3.0, ctx))
-      case "max_session_gap" =>
-        known(n, ctx, Set("type", "maxGapSeconds"))
-        MaxSessionGap(lng(n, "maxGapSeconds", ctx))
-      case "contiguous_index" =>
-        known(n, ctx, Set("type", "base"))
-        ContiguousIndex(optI(n, "base", 0, ctx))
-      case "turn_count_between" =>
-        known(n, ctx, Set("type", "lo", "hi"))
-        // the case class validates lo <= hi itself; wrap for context
-        try TurnCountBetween(
-          opt(n, "lo", ctx)(_.canConvertToLong, "an integer")
-            .map(_.asLong()).getOrElse(1L),
-          opt(n, "hi", ctx)(_.canConvertToLong, "an integer")
-            .map(_.asLong()).getOrElse(Long.MaxValue))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "vector_shape" =>
-        known(n, ctx, Set("type", "column", "dim", "normLo", "normHi",
-          "maxFailRate"))
-        // the case class validates the legs itself; wrap for context
-        try VectorShape(str(n, "column", ctx),
-          opt(n, "dim", ctx)(v => v.isNumber && v.canConvertToInt,
-            "an integer").map(_.asInt()),
-          opt(n, "normLo", ctx)(_.isNumber, "a number").map(_.asDouble()),
-          opt(n, "normHi", ctx)(_.isNumber, "a number").map(_.asDouble()),
-          optD(n, "maxFailRate", 0.0, ctx))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "distribution_drift" =>
-        known(n, ctx, Set("type", "column", "dim", "dimColumn", "maxPsi",
-          "bins", "maxKs"))
-        DistributionDrift(str(n, "column", ctx), str(n, "dim", ctx),
-          str(n, "dimColumn", ctx), optD(n, "maxPsi", 0.25, ctx),
-          optI(n, "bins", 10, ctx),
-          opt(n, "maxKs", ctx)(_.isNumber, "a number").map(_.asDouble()))
-      case "max_duplicate_rate" =>
-        known(n, ctx, Set("type", "column", "maxRate", "normalized", "approx"))
-        MaxDuplicateRate(str(n, "column", ctx), optD(n, "maxRate", 0.0, ctx),
-          optB(n, "normalized", false, ctx), optB(n, "approx", false, ctx))
-      case "compliance" =>
-        known(n, ctx, Set("type", "label", "predicate", "maxFailRate"))
-        Compliance(str(n, "label", ctx), str(n, "predicate", ctx),
-          optD(n, "maxFailRate", 0.0, ctx))
-      case "parsable_as" =>
-        known(n, ctx, Set("type", "column", "castTo", "maxFailRate"))
-        // the case class validates castTo's DDL itself; wrap so the error
-        // carries the config context like expected_schema's does
-        try ParsableAs(str(n, "column", ctx), str(n, "castTo", ctx),
-          optD(n, "maxFailRate", 0.0, ctx))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "max_near_duplicate_rate" =>
-        known(n, ctx, Set("type", "column", "maxRate", "threshold",
-          "shingleK", "numHashes", "bands", "estJaccardMin"))
-        // the case class validates bands|numHashes itself; wrap for context
-        try MaxNearDuplicateRate(str(n, "column", ctx),
-          optD(n, "maxRate", 0.0, ctx), optD(n, "threshold", 0.7, ctx),
-          optI(n, "shingleK", 3, ctx), optI(n, "numHashes", 64, ctx),
-          optI(n, "bands", 32, ctx), optD(n, "estJaccardMin", 0.4, ctx))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "max_staleness" =>
-        known(n, ctx, Set("type", "column", "asOf", "maxLagSeconds"))
-        // the case class validates asOf's ISO shape itself; wrap so the
-        // error carries the config context like parsable_as's does
-        try MaxStaleness(str(n, "column", ctx), str(n, "asOf", ctx),
-          lng(n, "maxLagSeconds", ctx))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "no_pii" =>
-        known(n, ctx, Set("type", "column", "kinds", "maxFailRate"))
-        val kinds = Option(n.get("kinds")).filterNot(_.isNull)
-          .map(_ => strList(n, "kinds", ctx))
-          .getOrElse(graft.text.Pii.allKinds)
-        // the case class validates kind names itself; wrap so the error
-        // carries the config context like parsable_as's does
-        try NoPii(str(n, "column", ctx), kinds,
-          optD(n, "maxFailRate", 0.0, ctx))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "min_text_quality" =>
-        known(n, ctx, Set("type", "column", "minScore", "maxFailRate"))
-        // the case class validates minScore's range itself; wrap so the
-        // error carries the config context like parsable_as's does
-        try MinTextQuality(str(n, "column", ctx),
-          optD(n, "minScore", 0.3, ctx), optD(n, "maxFailRate", 0.0, ctx))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "language_share" =>
-        known(n, ctx, Set("type", "column", "lang", "lo", "hi"))
-        // the case class validates the lang name itself; wrap so the
-        // error carries the config context like parsable_as's does
-        try LanguageShare(str(n, "column", ctx), str(n, "lang", ctx),
-          optD(n, "lo", 0.0, ctx), optD(n, "hi", 1.0, ctx))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "length_bounds" =>
-        known(n, ctx, Set("type", "column", "lo", "hi", "maxFailRate"))
-        // the case class validates the bound pair itself; wrap for context
-        try LengthBounds(str(n, "column", ctx),
-          opt(n, "lo", ctx)(_.canConvertToLong, "an integer")
-            .map(_.asLong()),
-          opt(n, "hi", ctx)(_.canConvertToLong, "an integer")
-            .map(_.asLong()),
-          optD(n, "maxFailRate", 0.0, ctx))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "time_bucket_coverage" =>
-        known(n, ctx, Set("type", "column", "bucket", "minRows"))
-        // the case class validates the bucket name itself; wrap for context
-        try TimeBucketCoverage(str(n, "column", ctx),
-          optStr(n, "bucket", "hour", ctx),
-          opt(n, "minRows", ctx)(_.canConvertToLong, "an integer")
-            .map(_.asLong()).getOrElse(1L))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "value_share_between" =>
-        known(n, ctx, Set("type", "column", "value", "lo", "hi"))
-        // the case class validates the bounds itself; wrap for context
-        try ValueShareBetween(str(n, "column", ctx), str(n, "value", ctx),
-          optD(n, "lo", 0.0, ctx), optD(n, "hi", 1.0, ctx))
-        catch { case e: IllegalArgumentException =>
-          throw new IllegalArgumentException(s"suite config: $ctx: " +
-            e.getMessage, e) }
-      case "correlation_between" =>
-        known(n, ctx, Set("type", "x", "y", "lo", "hi"))
-        CorrelationBetween(str(n, "x", ctx), str(n, "y", ctx),
-          optD(n, "lo", -1.0, ctx), optD(n, "hi", 1.0, ctx))
-      case "entropy_between" =>
-        known(n, ctx, Set("type", "column", "lo", "hi"))
-        EntropyBetween(str(n, "column", ctx), optD(n, "lo", 0.0, ctx),
-          optD(n, "hi", Double.MaxValue, ctx))
-      case "uniqueness_between" =>
-        known(n, ctx, Set("type", "columns", "lo", "hi"))
-        UniquenessBetween(strList(n, "columns", ctx),
-          optD(n, "lo", 1.0, ctx), optD(n, "hi", 1.0, ctx))
-      case "distinctness_between" =>
-        known(n, ctx, Set("type", "columns", "lo", "hi"))
-        DistinctnessBetween(strList(n, "columns", ctx),
-          optD(n, "lo", 1.0, ctx), optD(n, "hi", 1.0, ctx))
-      case "mutual_information_between" =>
-        known(n, ctx, Set("type", "x", "y", "lo", "hi"))
-        MutualInformationBetween(str(n, "x", ctx), str(n, "y", ctx),
-          optD(n, "lo", 0.0, ctx), optD(n, "hi", Double.MaxValue, ctx))
-      case "allowed_transitions" =>
-        known(n, ctx, Set("type", "column", "allowed", "firstIn"))
-        val a = req(n, "allowed", ctx)
-        require(a.isArray && a.size > 0,
-          s"$ctx: 'allowed' must be a non-empty list of [from, to] pairs")
-        val pairs = a.elements().asScala.map { p =>
-          require(p.isArray && p.size == 2 && p.get(0).isTextual &&
-            p.get(1).isTextual,
-            s"$ctx: each 'allowed' entry must be a [from, to] string pair")
-          p.get(0).asText() -> p.get(1).asText()
-        }.toSeq
-        val firstIn = Option(n.get("firstIn")).filterNot(_.isNull).map { f =>
-          require(f.isArray && f.size > 0,
-            s"$ctx: 'firstIn' must be a non-empty list of strings")
-          f.elements().asScala.map { v =>
-            require(v.isTextual, s"$ctx: 'firstIn' entries must be strings")
-            v.asText()
-          }.toSeq
-        }
-        AllowedTransitions(str(n, "column", ctx), pairs, firstIn)
-      case "monotonic" =>
-        known(n, ctx, Set("type", "column", "strict"))
-        Monotonic(str(n, "column", ctx), optB(n, "strict", false, ctx))
-      case "no_consecutive_repeats" =>
-        known(n, ctx, Set("type", "column"))
-        NoConsecutiveRepeats(str(n, "column", ctx))
-      case "functional_dependency" =>
-        known(n, ctx, Set("type", "determinant", "dependent"))
-        val d = req(n, "determinant", ctx)
-        require(d.isArray && d.size > 0,
-          s"$ctx: 'determinant' must be a non-empty list of columns")
-        FunctionalDependency(
-          d.elements().asScala.map { v =>
-            require(v.isTextual, s"$ctx: 'determinant' entries must be strings")
-            v.asText()
-          }.toSeq,
-          str(n, "dependent", ctx))
-      case "turn_rate_drift" =>
-        known(n, ctx, Set("type", "bucket", "period", "method", "seasonal",
-          "residMethod", "residThreshold", "psiThreshold", "ksThreshold"))
-        TurnRateDrift(optStr(n, "bucket", "1 hour", ctx), optI(n, "period", 24, ctx),
-          optStr(n, "method", "stl", ctx), optI(n, "seasonal", 7, ctx),
-          optStr(n, "residMethod", "iqr", ctx), optD(n, "residThreshold", 2.0, ctx),
-          optD(n, "psiThreshold", 0.25, ctx), optD(n, "ksThreshold", 0.5, ctx))
-      case other => throw new IllegalArgumentException(
-        s"suite config: unknown constraint type '$other' (supported: " +
-          supportedTypes.mkString(", ") + ")")
+  private def parseTree(root: JsonNode): Check = {
+    need(root != null && root.isObject, "suite config: top level must be a mapping")
+    val header = within("suite") {
+      known(root, Set("name", "keyCol", "orderCol", "tsCol", "dims",
+        "constraints"))
+      val cs = root.get("constraints")
+      need(cs != null && cs.isArray && cs.size > 0,
+        "'constraints' must be a non-empty list")
+      Check(str("name").decode(root), Nil,
+        str("keyCol", "conv_id").decode(root),
+        str("orderCol", "turn_idx").decode(root),
+        str("tsCol", "ts").decode(root))
     }
+    header.copy(constraints =
+      root.get("constraints").elements().asScala.map(constraint).toSeq)
   }
 
-  /** Every constraint type the parser accepts — the 'supported:' help in
-    * the unknown-type error. SuiteConfigSpec ratchets this list against
-    * the parser: each name here must reach a real match arm (a typo near
-    * a NEWLY added type previously got a help message omitting it — r5
-    * ADVICE).
-    */
-  val supportedTypes: Seq[String] = Seq(
-    "not_null", "in_set", "matches_regex", "value_bounds", "length_bounds",
-    "text_equals", "expected_schema",
-    "unique_key", "referential", "asof_integrity", "min_rows",
-    "mean_between", "stddev_between", "quantile_between",
-    "distinct_count_between", "max_key_share", "robust_z", "iqr_outliers",
-    "global_z", "rolling_z_drift", "max_session_gap", "contiguous_index",
-    "distribution_drift", "max_duplicate_rate", "compliance", "parsable_as",
-    "no_pii", "max_staleness", "max_near_duplicate_rate",
-    "min_text_quality", "language_share", "turn_count_between",
-    "value_share_between", "vector_shape", "time_bucket_coverage",
-    "correlation_between", "entropy_between", "uniqueness_between",
-    "distinctness_between", "mutual_information_between",
-    "allowed_transitions", "monotonic", "no_consecutive_repeats",
-    "functional_dependency", "turn_rate_drift")
+  private def dimsOf(root: JsonNode): Map[String, String] =
+    Option(root.get("dims")).fold(Map.empty[String, String]) { d =>
+      need(d.isObject, "suite config: 'dims' must be a mapping of name -> path")
+      d.properties().asScala.map { e =>
+        need(e.getValue.isTextual,
+          s"suite config: dim '${e.getKey}' must be a path string")
+        e.getKey -> e.getValue.asText()
+      }.toMap
+    }
 
-  // ---- rendering (the write side of the config seam) -------------------------
+  private def constraint(n: JsonNode): Constraint = {
+    val t = within("constraint") {
+      need(n.isObject, "each constraint must be a mapping")
+      str("type").decode(n)
+    }
+    val codec = byName.getOrElse(t, throw new IllegalArgumentException(
+      s"suite config: unknown constraint type '$t' (supported: " +
+        supportedTypes.mkString(", ") + ")"))
+    // the case classes validate their own arguments (bound order, DDL,
+    // kind and language names); their errors get the same context
+    within(s"constraint '$t'")(codec.decode(n))
+  }
 
   /** Render a [[Check]] back to a YAML suite document that [[parse]] accepts
     * — the write half of the config round-trip. Every field is written
     * explicitly (a generated config should read as a complete record of
-    * what will run, not depend on defaults that may drift). The main
-    * producer is [[graft.compile.Suggestions]]: profile a blessed snapshot,
-    * render the suggested suite, review, commit.
+    * what will run, not depend on defaults that may drift); an absent
+    * optional leg (`None`) is left out. The main producer is
+    * [[graft.compile.Suggestions]]: profile a blessed snapshot, render the
+    * suggested suite, review, commit.
     *
     * [[TextEquals]] holds a compiled Column; it renders via the
     * expression's SQL form, which round-trips through `functions.expr`.
     */
   def render(check: Check, dims: Map[String, String] = Map.empty): String = {
     val root = mapper.createObjectNode()
-    root.put("name", check.name)
-    root.put("keyCol", check.keyCol)
-    root.put("orderCol", check.orderCol)
-    root.put("tsCol", check.tsCol)
+    root.put("name", check.name).put("keyCol", check.keyCol)
+      .put("orderCol", check.orderCol).put("tsCol", check.tsCol)
     if (dims.nonEmpty) {
       val d = root.putObject("dims")
       dims.toSeq.sortBy(_._1).foreach { case (k, v) => d.put(k, v) }
     }
     val arr = root.putArray("constraints")
-    check.constraints.foreach(c => arr.add(constraintNode(c)))
+    check.constraints.foreach(c =>
+      byClass(c.getClass).encode(c, arr.addObject()))
     mapper.writeValueAsString(root)
   }
 
-  private def constraintNode(c: Constraint): JsonNode = {
-    val n = mapper.createObjectNode()
-    def strings(field: String, vs: Seq[String]): Unit = {
-      val a = n.putArray(field); vs.foreach(v => a.add(v))
+  // ---- the codec table: one entry per constraint type -------------------------
+
+  private val codecs: Seq[Codec] = Seq(
+    codec("not_null", str("column"), dbl("maxNullRate", 0.0))(NotNull),
+    codec("in_set", str("column"), scalars("allowed"),
+      dbl("maxFailRate", 0.0))(InSet),
+    codec("matches_regex", str("column"), str("regex"),
+      dbl("maxFailRate", 0.0))(MatchesRegex),
+    codec("value_bounds", str("column"), dbl.opt("lo"), dbl.opt("hi"),
+        dbl("maxFailRate", 0.0)) { (c, lo, hi, rate) =>
+      need(lo.nonEmpty || hi.nonEmpty, "need 'lo' and/or 'hi'")
+      ValueBounds(c, lo, hi, rate)
+    },
+    codec("length_bounds", str("column"), lng.opt("lo"), lng.opt("hi"),
+      dbl("maxFailRate", 0.0))(LengthBounds),
+    codec("text_equals", str("column"), sql("expectedSql"))(TextEquals),
+    codec("expected_schema", ddlColumns("columns"),
+      bool("allowExtra", true))(ExpectedSchema),
+    codec("unique_key", strs("columns"))(UniqueKey),
+    codec("referential", str("column"), str("dim"), str("dimColumn"),
+      bool("nullOk", true), bool("broadcastDim", true),
+      bool("keyCensus", false))(ReferentialIntegrity),
+    codec("asof_integrity", str("column"), str("dim"), str("dimColumn"),
+      str("dimTsColumn"), str("granularity", "day"), bool("nullOk", true),
+      bool("broadcastDim", true))(AsOfIntegrity),
+    codec("min_rows", lng("n"))(MinRows),
+    codec("mean_between", str("column"), dbl("lo"), dbl("hi"))(MeanBetween),
+    codec("stddev_between", str("column"), dbl("lo"), dbl("hi"))(StddevBetween),
+    codec("quantile_between", str("column"), dbl("q"), dbl("lo"), dbl("hi"),
+      bool("approx", true))(QuantileBetween),
+    codec("distinct_count_between", str("column"), lng("lo"),
+      lng("hi"))(DistinctCountBetween),
+    codec("max_key_share", str("column"), dbl("maxFrac", 1.0 / 512),
+      int("k", 2048))(MaxKeyShare),
+    codec("robust_z", str("column"), dbl("threshold", 3.5),
+      bool("approx", true))(RobustZ),
+    codec("iqr_outliers", str("column"), dbl("k", 2.0),
+      bool("approx", true))(IqrOutliers),
+    codec("global_z", str("column"), dbl("threshold", 3.0))(GlobalZ),
+    codec("rolling_z_drift", str("column"), int("window", 24),
+      dbl("threshold", 3.0))(RollingZDrift),
+    codec("max_session_gap", lng("maxGapSeconds"))(MaxSessionGap),
+    codec("contiguous_index", int("base", 0))(ContiguousIndex),
+    codec("distribution_drift", str("column"), str("dim"), str("dimColumn"),
+      dbl("maxPsi", 0.25), int("bins", 10),
+      dbl.opt("maxKs"))(DistributionDrift),
+    codec("max_duplicate_rate", str("column"), dbl("maxRate", 0.0),
+      bool("normalized", false), bool("approx", false))(MaxDuplicateRate),
+    codec("compliance", str("label"), str("predicate"),
+      dbl("maxFailRate", 0.0))(Compliance),
+    codec("parsable_as", str("column"), str("castTo"),
+      dbl("maxFailRate", 0.0))(ParsableAs),
+    codec("no_pii", str("column"), strs("kinds", graft.text.Pii.allKinds),
+      dbl("maxFailRate", 0.0))(NoPii),
+    codec("max_staleness", str("column"), str("asOf"),
+      lng("maxLagSeconds"))(MaxStaleness),
+    codec("max_near_duplicate_rate", str("column"), dbl("maxRate", 0.0),
+      dbl("threshold", 0.7), int("shingleK", 3), int("numHashes", 64),
+      int("bands", 32), dbl("estJaccardMin", 0.4))(MaxNearDuplicateRate),
+    codec("min_text_quality", str("column"), dbl("minScore", 0.3),
+      dbl("maxFailRate", 0.0))(MinTextQuality),
+    codec("language_share", str("column"), str("lang"), dbl("lo", 0.0),
+      dbl("hi", 1.0))(LanguageShare),
+    codec("turn_count_between", lng("lo", 1L),
+      lng("hi", Long.MaxValue))(TurnCountBetween),
+    codec("value_share_between", str("column"), str("value"), dbl("lo", 0.0),
+      dbl("hi", 1.0))(ValueShareBetween),
+    codec("vector_shape", str("column"), int.opt("dim"), dbl.opt("normLo"),
+      dbl.opt("normHi"), dbl("maxFailRate", 0.0))(VectorShape),
+    codec("time_bucket_coverage", str("column"), str("bucket", "hour"),
+      lng("minRows", 1L))(TimeBucketCoverage),
+    codec("correlation_between", str("x"), str("y"), dbl("lo", -1.0),
+      dbl("hi", 1.0))(CorrelationBetween),
+    codec("entropy_between", str("column"), dbl("lo", 0.0),
+      dbl("hi", Double.MaxValue))(EntropyBetween),
+    codec("uniqueness_between", strs("columns"), dbl("lo", 1.0),
+      dbl("hi", 1.0))(UniquenessBetween),
+    codec("distinctness_between", strs("columns"), dbl("lo", 1.0),
+      dbl("hi", 1.0))(DistinctnessBetween),
+    codec("mutual_information_between", str("x"), str("y"), dbl("lo", 0.0),
+      dbl("hi", Double.MaxValue))(MutualInformationBetween),
+    codec("allowed_transitions", str("column"), pairs("allowed"),
+      strs.opt("firstIn"))(AllowedTransitions),
+    codec("monotonic", str("column"), bool("strict", false))(Monotonic),
+    codec("no_consecutive_repeats", str("column"))(NoConsecutiveRepeats),
+    codec("functional_dependency", strs("determinant"),
+      str("dependent"))(FunctionalDependency),
+    codec("turn_rate_drift", str("bucket", "1 hour"), int("period", 24),
+      str("method", "stl"), int("seasonal", 7), str("residMethod", "iqr"),
+      dbl("residThreshold", 2.0), dbl("psiThreshold", 0.25),
+      dbl("ksThreshold", 0.5))(TurnRateDrift))
+
+  private val byName = codecs.map(c => c.name -> c).toMap
+  private val byClass: Map[Class[_], Codec] = codecs.map(c => c.cls -> c).toMap
+  // a second entry for a name or class would silently shadow the first
+  require(byName.size == codecs.size && byClass.size == codecs.size,
+    "suite config: the codec table lists a type name or class twice")
+
+  /** Every constraint type the parser accepts — the 'supported:' help in
+    * the unknown-type error; the codec table's names, in table order.
+    */
+  val supportedTypes: Seq[String] = codecs.map(_.name)
+
+  // ---- codec machinery --------------------------------------------------------
+
+  /** One constraint type's YAML face: its `type` name, its fields in
+    * case-class parameter order (so [[render]] can zip them with
+    * `productIterator`), its class and its constructor.
+    */
+  private final class Codec(val name: String, fields: IndexedSeq[Field[_]],
+      val cls: Class[_], build: IndexedSeq[Any] => Constraint) {
+    private val allowed = fields.map(_.name).toSet + "type"
+    // the unknown-field check runs first, so a typo ('colum') is reported
+    // as unknown rather than as a missing 'column'
+    def decode(n: JsonNode): Constraint = {
+      known(n, allowed)
+      build(fields.map(_.decode(n)))
     }
-    c match {
-      case NotNull(column, maxNullRate) =>
-        n.put("type", "not_null").put("column", column)
-          .put("maxNullRate", maxNullRate)
-      case InSet(column, allowed, maxFailRate) =>
-        n.put("type", "in_set").put("column", column)
-        strings("allowed", allowed)
-        n.put("maxFailRate", maxFailRate)
-      case MatchesRegex(column, regex, maxFailRate) =>
-        n.put("type", "matches_regex").put("column", column)
-          .put("regex", regex).put("maxFailRate", maxFailRate)
-      case ValueBounds(column, lo, hi, maxFailRate) =>
-        n.put("type", "value_bounds").put("column", column)
-        lo.foreach(n.put("lo", _)); hi.foreach(n.put("hi", _))
-        n.put("maxFailRate", maxFailRate)
-      case TextEquals(column, expected) =>
-        n.put("type", "text_equals").put("column", column)
-          .put("expectedSql",
-            org.apache.spark.sql.GraftBridge.expression(expected).sql)
-      case ExpectedSchema(columns, allowExtra) =>
-        n.put("type", "expected_schema")
-        val cols = n.putObject("columns")
-        columns.foreach { case (name, ddl) => cols.put(name, ddl) }
-        n.put("allowExtra", allowExtra)
-      case UniqueKey(columns) =>
-        n.put("type", "unique_key"); strings("columns", columns)
-      case ReferentialIntegrity(column, dim, dimColumn, nullOk, bcast, census) =>
-        n.put("type", "referential").put("column", column).put("dim", dim)
-          .put("dimColumn", dimColumn).put("nullOk", nullOk)
-          .put("broadcastDim", bcast).put("keyCensus", census)
-      case AsOfIntegrity(column, dim, dimColumn, dimTs, gran, nullOk, bcast) =>
-        n.put("type", "asof_integrity").put("column", column).put("dim", dim)
-          .put("dimColumn", dimColumn).put("dimTsColumn", dimTs)
-          .put("granularity", gran).put("nullOk", nullOk)
-          .put("broadcastDim", bcast)
-      case MinRows(rows) =>
-        n.put("type", "min_rows").put("n", rows)
-      case MeanBetween(column, lo, hi) =>
-        n.put("type", "mean_between").put("column", column)
-          .put("lo", lo).put("hi", hi)
-      case StddevBetween(column, lo, hi) =>
-        n.put("type", "stddev_between").put("column", column)
-          .put("lo", lo).put("hi", hi)
-      case QuantileBetween(column, q, lo, hi, approx) =>
-        n.put("type", "quantile_between").put("column", column).put("q", q)
-          .put("lo", lo).put("hi", hi).put("approx", approx)
-      case DistinctCountBetween(column, lo, hi) =>
-        n.put("type", "distinct_count_between").put("column", column)
-          .put("lo", lo).put("hi", hi)
-      case MaxKeyShare(column, maxFrac, k) =>
-        n.put("type", "max_key_share").put("column", column)
-          .put("maxFrac", maxFrac).put("k", k)
-      case RobustZ(column, threshold, approx) =>
-        n.put("type", "robust_z").put("column", column)
-          .put("threshold", threshold).put("approx", approx)
-      case IqrOutliers(column, k, approx) =>
-        n.put("type", "iqr_outliers").put("column", column)
-          .put("k", k).put("approx", approx)
-      case GlobalZ(column, threshold) =>
-        n.put("type", "global_z").put("column", column)
-          .put("threshold", threshold)
-      case RollingZDrift(column, window, threshold) =>
-        n.put("type", "rolling_z_drift").put("column", column)
-          .put("window", window).put("threshold", threshold)
-      case MaxSessionGap(maxGapSeconds) =>
-        n.put("type", "max_session_gap").put("maxGapSeconds", maxGapSeconds)
-      case ContiguousIndex(base) =>
-        n.put("type", "contiguous_index").put("base", base)
-      case TurnCountBetween(lo, hi) =>
-        n.put("type", "turn_count_between").put("lo", lo).put("hi", hi)
-      case VectorShape(column, dim, normLo, normHi, maxFailRate) =>
-        n.put("type", "vector_shape").put("column", column)
-        dim.foreach(n.put("dim", _))
-        normLo.foreach(n.put("normLo", _))
-        normHi.foreach(n.put("normHi", _))
-        n.put("maxFailRate", maxFailRate)
-      case DistributionDrift(column, dim, dimColumn, maxPsi, bins, maxKs) =>
-        n.put("type", "distribution_drift").put("column", column)
-          .put("dim", dim).put("dimColumn", dimColumn)
-          .put("maxPsi", maxPsi).put("bins", bins)
-        maxKs.foreach(n.put("maxKs", _))
-      case MaxDuplicateRate(column, maxRate, normalized, approx) =>
-        n.put("type", "max_duplicate_rate").put("column", column)
-          .put("maxRate", maxRate).put("normalized", normalized)
-          .put("approx", approx)
-      case Compliance(label, predicate, maxFailRate) =>
-        n.put("type", "compliance").put("label", label)
-          .put("predicate", predicate).put("maxFailRate", maxFailRate)
-      case ParsableAs(column, castTo, maxFailRate) =>
-        n.put("type", "parsable_as").put("column", column)
-          .put("castTo", castTo).put("maxFailRate", maxFailRate)
-      case NoPii(column, kinds, maxFailRate) =>
-        n.put("type", "no_pii").put("column", column)
-        strings("kinds", kinds)
-        n.put("maxFailRate", maxFailRate)
-      case MinTextQuality(column, minScore, maxFailRate) =>
-        n.put("type", "min_text_quality").put("column", column)
-          .put("minScore", minScore).put("maxFailRate", maxFailRate)
-      case LanguageShare(column, lang, lo, hi) =>
-        n.put("type", "language_share").put("column", column)
-          .put("lang", lang).put("lo", lo).put("hi", hi)
-      case ValueShareBetween(column, value, lo, hi) =>
-        n.put("type", "value_share_between").put("column", column)
-          .put("value", value).put("lo", lo).put("hi", hi)
-      case TimeBucketCoverage(column, bucket, minRows) =>
-        n.put("type", "time_bucket_coverage").put("column", column)
-          .put("bucket", bucket).put("minRows", minRows)
-      case LengthBounds(column, lo, hi, maxFailRate) =>
-        n.put("type", "length_bounds").put("column", column)
-        lo.foreach(n.put("lo", _))
-        hi.foreach(n.put("hi", _))
-        n.put("maxFailRate", maxFailRate)
-      case MaxStaleness(column, asOf, maxLagSeconds) =>
-        n.put("type", "max_staleness").put("column", column)
-          .put("asOf", asOf).put("maxLagSeconds", maxLagSeconds)
-      case MaxNearDuplicateRate(column, maxRate, threshold, shingleK,
-          numHashes, bands, estJaccardMin) =>
-        n.put("type", "max_near_duplicate_rate").put("column", column)
-          .put("maxRate", maxRate).put("threshold", threshold)
-          .put("shingleK", shingleK).put("numHashes", numHashes)
-          .put("bands", bands).put("estJaccardMin", estJaccardMin)
-      case CorrelationBetween(x, y, lo, hi) =>
-        n.put("type", "correlation_between").put("x", x).put("y", y)
-          .put("lo", lo).put("hi", hi)
-      case EntropyBetween(column, lo, hi) =>
-        n.put("type", "entropy_between").put("column", column)
-          .put("lo", lo).put("hi", hi)
-      case UniquenessBetween(columns, lo, hi) =>
-        n.put("type", "uniqueness_between")
-        strings("columns", columns)
-        n.put("lo", lo).put("hi", hi)
-      case DistinctnessBetween(columns, lo, hi) =>
-        n.put("type", "distinctness_between")
-        strings("columns", columns)
-        n.put("lo", lo).put("hi", hi)
-      case MutualInformationBetween(x, y, lo, hi) =>
-        n.put("type", "mutual_information_between").put("x", x).put("y", y)
-          .put("lo", lo).put("hi", hi)
-      case AllowedTransitions(column, allowed, firstIn) =>
-        n.put("type", "allowed_transitions").put("column", column)
-        val a = n.putArray("allowed")
-        allowed.foreach { case (from, to) =>
-          val p = a.addArray(); p.add(from); p.add(to)
-        }
-        firstIn.foreach(strings("firstIn", _))
-      case Monotonic(column, strict) =>
-        n.put("type", "monotonic").put("column", column).put("strict", strict)
-      case NoConsecutiveRepeats(column) =>
-        n.put("type", "no_consecutive_repeats").put("column", column)
-      case FunctionalDependency(determinant, dependent) =>
-        n.put("type", "functional_dependency")
-        strings("determinant", determinant)
-        n.put("dependent", dependent)
-      case TurnRateDrift(bucket, period, method, seasonal, residMethod,
-          residThreshold, psiThreshold, ksThreshold) =>
-        n.put("type", "turn_rate_drift").put("bucket", bucket)
-          .put("period", period).put("method", method)
-          .put("seasonal", seasonal).put("residMethod", residMethod)
-          .put("residThreshold", residThreshold)
-          .put("psiThreshold", psiThreshold).put("ksThreshold", ksThreshold)
+    def encode(c: Constraint, n: ObjectNode): Unit = {
+      n.put("type", name)
+      fields.zip(c.asInstanceOf[Product].productIterator)
+        .foreach { case (f, v) => f.encode(n, v) }
     }
-    n
   }
 
-  // ---- strict field access ----------------------------------------------------
+  /** One YAML field: its name, its default (`None` = required), a strict
+    * reader of a present, non-null value, and a writer.
+    */
+  private final case class Field[A](name: String, default: Option[A],
+      read: JsonNode => A, write: (ObjectNode, A) => Unit) {
+    def decode(n: JsonNode): A =
+      Option(n.get(name)).filterNot(_.isNull).map(read).orElse(default)
+        .getOrElse(throw new IllegalArgumentException(
+          s"missing required field '$name'"))
+    def encode(n: ObjectNode, v: Any): Unit = write(n, v.asInstanceOf[A])
+  }
 
-  private def known(n: JsonNode, ctx: String, allowed: Set[String]): Unit = {
+  /** How one YAML value type is checked, read and written. Reads are
+    * type-checked, never coerced: asDouble()/asInt()/asBoolean() silently
+    * turn a mistyped value into 0.0/0/false (e.g. a stray word in a boolean
+    * field), which is exactly the hours-later wrong verdict strict parsing
+    * exists to prevent. (This Jackson YAML build speaks YAML 1.1, so
+    * unquoted yes/no ARE booleans and pass.)
+    */
+  private final class Kind[A](what: String, ok: JsonNode => Boolean,
+      get: JsonNode => A, put: (ObjectNode, String, A) => Unit) {
+    private def read(name: String)(v: JsonNode): A = {
+      need(ok(v), s"field '$name' must be $what")
+      get(v)
+    }
+    def apply(name: String): Field[A] =
+      Field(name, None, read(name), put(_, name, _))
+    def apply(name: String, default: A): Field[A] =
+      Field(name, Some(default), read(name), put(_, name, _))
+    /** An optional leg: absent reads as `None` and is not written. */
+    def opt(name: String): Field[Option[A]] = Field(name, Some(None),
+      v => Some(read(name)(v)), (n, o) => o.foreach(put(n, name, _)))
+  }
+
+  private def list[A](what: String, minSize: Int, item: JsonNode => Boolean,
+      get: JsonNode => A, add: (ArrayNode, A) => Unit): Kind[Seq[A]] =
+    new Kind[Seq[A]](what,
+      v => v.isArray && v.size >= minSize && v.elements().asScala.forall(item),
+      _.elements().asScala.map(get).toSeq,
+      (n, f, vs) => { val a = n.putArray(f); vs.foreach(add(a, _)) })
+
+  // lazy: the codec table above reads these while the object initializes
+  private lazy val str = new Kind[String]("a string", _.isTextual, _.asText(),
+    _.put(_, _))
+  private lazy val dbl = new Kind[Double]("a number", _.isNumber, _.asDouble(),
+    _.put(_, _))
+  // integral only: canConvertToInt alone would truncate 1.5 to 1
+  private lazy val int = new Kind[Int]("an integer",
+    v => v.isIntegralNumber && v.canConvertToInt, _.asInt(), _.put(_, _))
+  private lazy val lng = new Kind[Long]("an integer",
+    v => v.isIntegralNumber && v.canConvertToLong, _.asLong(), _.put(_, _))
+  private lazy val bool = new Kind[Boolean]("a boolean (unquoted true/false)",
+    _.isBoolean, _.asBoolean(), _.put(_, _))
+  private lazy val strs = list[String]("a non-empty list of strings", 1,
+    _.isTextual, _.asText(), _.add(_))
+  // an int column's allowed set is legitimate: numbers and booleans are
+  // read as their text; null and containers are refused
+  private lazy val scalars = list[String](
+    "a list of strings, numbers or booleans", 0,
+    v => v.isTextual || v.isNumber || v.isBoolean, _.asText(), _.add(_))
+  private lazy val pairs = list[(String, String)](
+    "a non-empty list of [from, to] string pairs", 1,
+    p => p.isArray && p.size == 2 && p.get(0).isTextual && p.get(1).isTextual,
+    p => p.get(0).asText() -> p.get(1).asText(),
+    (a, p) => a.addArray().add(p._1).add(p._2))
+  // sorted by name: the check is order-insensitive and Jackson's object
+  // nodes don't guarantee document order. A typo'd DDL type fails HERE
+  // with the column name, not hours later inside the validator.
+  private lazy val ddlColumns = new Kind[Seq[(String, String)]](
+    "a non-empty mapping of name -> DDL type string",
+    v => v.isObject && v.size > 0 && v.elements().asScala.forall(_.isTextual),
+    _.properties().asScala.toSeq.map(e => e.getKey -> e.getValue.asText())
+      .sortBy(_._1).map { case (c, t) =>
+        need(Try(DataType.fromDDL(t)).isSuccess,
+          s"column '$c' has unparseable DDL type '$t'")
+        c -> t
+      },
+    (n, f, cs) => {
+      val o = n.putObject(f); cs.foreach { case (c, t) => o.put(c, t) }
+    })
+  private lazy val sql = new Kind[Column]("a string",
+    _.isTextual, v => functions.expr(v.asText()),
+    (n, f, c) => n.put(f, GraftBridge.expression(c).sql))
+
+  // one overload per field count; the class comes from the constructor's
+  // result type
+  private def codec[T1, K <: Constraint: ClassTag](t: String, a: Field[T1])(
+      f: T1 => K): Codec = entry(t, a)(v => f(v(0).asInstanceOf[T1]))
+  private def codec[T1, T2, K <: Constraint: ClassTag](t: String, a: Field[T1],
+      b: Field[T2])(f: (T1, T2) => K): Codec =
+    entry(t, a, b)(v => f.tupled((v(0), v(1)).asInstanceOf[(T1, T2)]))
+  private def codec[T1, T2, T3, K <: Constraint: ClassTag](t: String,
+      a: Field[T1], b: Field[T2], c: Field[T3])(f: (T1, T2, T3) => K): Codec =
+    entry(t, a, b, c)(v =>
+      f.tupled((v(0), v(1), v(2)).asInstanceOf[(T1, T2, T3)]))
+  private def codec[T1, T2, T3, T4, K <: Constraint: ClassTag](t: String,
+      a: Field[T1], b: Field[T2], c: Field[T3], d: Field[T4])(
+      f: (T1, T2, T3, T4) => K): Codec =
+    entry(t, a, b, c, d)(v =>
+      f.tupled((v(0), v(1), v(2), v(3)).asInstanceOf[(T1, T2, T3, T4)]))
+  private def codec[T1, T2, T3, T4, T5, K <: Constraint: ClassTag](t: String,
+      a: Field[T1], b: Field[T2], c: Field[T3], d: Field[T4], e: Field[T5])(
+      f: (T1, T2, T3, T4, T5) => K): Codec =
+    entry(t, a, b, c, d, e)(v => f.tupled((v(0), v(1), v(2), v(3), v(4))
+      .asInstanceOf[(T1, T2, T3, T4, T5)]))
+  private def codec[T1, T2, T3, T4, T5, T6, K <: Constraint: ClassTag](
+      t: String, a: Field[T1], b: Field[T2], c: Field[T3], d: Field[T4],
+      e: Field[T5], g: Field[T6])(f: (T1, T2, T3, T4, T5, T6) => K): Codec =
+    entry(t, a, b, c, d, e, g)(v => f.tupled((v(0), v(1), v(2), v(3), v(4),
+      v(5)).asInstanceOf[(T1, T2, T3, T4, T5, T6)]))
+  private def codec[T1, T2, T3, T4, T5, T6, T7, K <: Constraint: ClassTag](
+      t: String, a: Field[T1], b: Field[T2], c: Field[T3], d: Field[T4],
+      e: Field[T5], g: Field[T6], h: Field[T7])(
+      f: (T1, T2, T3, T4, T5, T6, T7) => K): Codec =
+    entry(t, a, b, c, d, e, g, h)(v => f.tupled((v(0), v(1), v(2), v(3), v(4),
+      v(5), v(6)).asInstanceOf[(T1, T2, T3, T4, T5, T6, T7)]))
+  private def codec[T1, T2, T3, T4, T5, T6, T7, T8, K <: Constraint: ClassTag](
+      t: String, a: Field[T1], b: Field[T2], c: Field[T3], d: Field[T4],
+      e: Field[T5], g: Field[T6], h: Field[T7], i: Field[T8])(
+      f: (T1, T2, T3, T4, T5, T6, T7, T8) => K): Codec =
+    entry(t, a, b, c, d, e, g, h, i)(v => f.tupled((v(0), v(1), v(2), v(3),
+      v(4), v(5), v(6), v(7)).asInstanceOf[(T1, T2, T3, T4, T5, T6, T7, T8)]))
+
+  private def entry[K <: Constraint](t: String, fields: Field[_]*)(
+      build: IndexedSeq[Any] => K)(implicit k: ClassTag[K]): Codec =
+    new Codec(t, fields.toIndexedSeq, k.runtimeClass, build)
+
+  // ---- strict checks ----------------------------------------------------------
+
+  private def need(ok: Boolean, msg: => String): Unit =
+    if (!ok) throw new IllegalArgumentException(msg)
+
+  /** The one place a config error gets its context. */
+  private def within[A](ctx: String)(body: => A): A =
+    try body
+    catch { case e: IllegalArgumentException =>
+      throw new IllegalArgumentException(
+        s"suite config: $ctx: ${e.getMessage}", e) }
+
+  private def known(n: JsonNode, allowed: Set[String]): Unit = {
     val unknown = n.fieldNames().asScala.filterNot(allowed).toSeq
-    require(unknown.isEmpty,
-      s"suite config: $ctx has unknown field(s) ${unknown.mkString("'", "', '", "'")} " +
+    need(unknown.isEmpty,
+      s"unknown field(s) ${unknown.mkString("'", "', '", "'")} " +
         s"(allowed: ${allowed.toSeq.sorted.mkString(", ")})")
   }
-
-  private def req(n: JsonNode, f: String, ctx: String): JsonNode = {
-    val v = n.get(f)
-    require(v != null && !v.isNull, s"suite config: $ctx is missing required field '$f'")
-    v
-  }
-
-  private def str(n: JsonNode, f: String, ctx: String): String = {
-    val v = req(n, f, ctx)
-    require(v.isTextual, s"suite config: $ctx field '$f' must be a string")
-    v.asText()
-  }
-
-  private def strList(n: JsonNode, f: String, ctx: String): Seq[String] = {
-    val v = req(n, f, ctx)
-    require(v.isArray && v.size > 0,
-      s"suite config: $ctx field '$f' must be a non-empty list of strings")
-    v.elements().asScala.map { e =>
-      require(e.isTextual, s"suite config: $ctx '$f' entries must be strings")
-      e.asText()
-    }.toSeq
-  }
-
-  private def dbl(n: JsonNode, f: String, ctx: String): Double = {
-    val v = req(n, f, ctx)
-    require(v.isNumber, s"suite config: $ctx field '$f' must be a number")
-    v.asDouble()
-  }
-
-  private def lng(n: JsonNode, f: String, ctx: String): Long = {
-    val v = req(n, f, ctx)
-    require(v.canConvertToLong, s"suite config: $ctx field '$f' must be an integer")
-    v.asLong()
-  }
-
-  // optional fields type-check like the required ones: asDouble()/asInt()/
-  // asBoolean() silently coerce a mistyped value to 0.0/0/false (e.g. a
-  // stray word in a boolean field), which is exactly the hours-later
-  // wrong verdict strict parsing exists to prevent. (This Jackson YAML
-  // build speaks YAML 1.1, so unquoted yes/no ARE booleans and pass.)
-  private def opt(n: JsonNode, f: String, ctx: String)(
-      ok: JsonNode => Boolean, what: String): Option[JsonNode] =
-    Option(n.get(f)).filterNot(_.isNull).map { v =>
-      require(ok(v), s"suite config: $ctx field '$f' must be $what")
-      v
-    }
-
-  private def optStr(n: JsonNode, f: String, dflt: String,
-      ctx: String): String =
-    opt(n, f, ctx)(_.isTextual, "a string").map(_.asText()).getOrElse(dflt)
-
-  private def optD(n: JsonNode, f: String, dflt: Double,
-      ctx: String): Double =
-    opt(n, f, ctx)(_.isNumber, "a number").map(_.asDouble()).getOrElse(dflt)
-
-  private def optI(n: JsonNode, f: String, dflt: Int, ctx: String): Int =
-    opt(n, f, ctx)(v => v.isNumber && v.canConvertToInt, "an integer")
-      .map(_.asInt()).getOrElse(dflt)
-
-  private def optB(n: JsonNode, f: String, dflt: Boolean,
-      ctx: String): Boolean =
-    opt(n, f, ctx)(_.isBoolean, "a boolean (unquoted true/false)")
-      .map(_.asBoolean()).getOrElse(dflt)
 }

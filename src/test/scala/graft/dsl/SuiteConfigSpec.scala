@@ -499,6 +499,50 @@ class SuiteConfigSpec extends GraftSuite {
     assert(SuiteConfig.dims("""{"name":"s","constraints":[]}""").isEmpty)
   }
 
+  test("a dims entry that is not a path string fails with the dim's name") {
+    def bad(dims: String): String =
+      intercept[IllegalArgumentException](SuiteConfig.dims(
+        s"""name: s
+           |dims: $dims
+           |constraints: [{type: min_rows, n: 1}]
+           |""".stripMargin)).getMessage
+    assert(bad("{roles: {path: /x}}").contains("'roles'"))
+    assert(bad("{roles: /x, tools: null}").contains("'tools'"))
+    assert(bad("{roles: [/x]}").contains("path string"))
+  }
+
+  test("in_set allowed takes scalars only; unique_key columns take strings only") {
+    def parse(doc: String): Check = SuiteConfig.parse(
+      s"""name: x
+         |constraints:
+         |  - $doc
+         |""".stripMargin)
+    // an int or boolean column's set is legitimate: read as the text
+    assert(parse("{type: in_set, column: n, allowed: [1, 2.5, true, a]}")
+      .constraints.head == InSet("n", Seq("1", "2.5", "true", "a")))
+    val e1 = intercept[IllegalArgumentException](
+      parse("{type: in_set, column: b, allowed: [{b: 1}, null, 2]}"))
+    assert(e1.getMessage.contains("'allowed'") &&
+      e1.getMessage.contains("in_set"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      parse("{type: unique_key, columns: [a, {b: 1}]}"))
+    assert(e2.getMessage.contains("'columns'") &&
+      e2.getMessage.contains("strings"), e2.getMessage)
+  }
+
+  test("an integer field refuses a fractional number instead of truncating it") {
+    def bad(doc: String): String =
+      intercept[IllegalArgumentException](SuiteConfig.parse(
+        s"""name: x
+           |constraints:
+           |  - $doc
+           |""".stripMargin)).getMessage
+    assert(bad("{type: vector_shape, column: e, dim: 1.5}").contains("'dim'"))
+    assert(bad("{type: min_rows, n: 2.5}").contains("integer"))
+    assert(bad("{type: rolling_z_drift, column: v, window: 24.0}")
+      .contains("'window'"))
+  }
+
   test("empty or missing constraints list is rejected") {
     intercept[IllegalArgumentException] {
       SuiteConfig.parse("""{"name":"s","constraints":[]}""")
